@@ -338,7 +338,8 @@ def main() -> None:
         "timing_scheme": "fixed HEADLINE order; median-of-3 for "
                          f"queries >{MEDIAN3_THRESHOLD_SEC}s",
         "sf": sf,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": (os.environ.get("SPARK_GRAFT_CPUS")
+                 or str(len(os.sched_getaffinity(0)))),
     }
     here = os.path.dirname(os.path.abspath(__file__))
     for name in ("BENCH_DETAIL.json",

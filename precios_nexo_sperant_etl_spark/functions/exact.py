@@ -63,14 +63,17 @@ def ddot(a: Column, b: Column) -> Column:
     product and nulls the whole fold, exactly as before.
     """
     n = F.greatest(F.size(a), F.size(b))
+    # A NULL array nulls the product, as zip_with does, even against an
+    # empty one: checked before n == 0, where size(NULL) would not count.
     # when(n == 0): sequence(0, -1) would DESCEND, not be empty — return
     # the fold's init value directly, as aggregate([]) does.
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        F.aggregate(
-            F.sequence(F.lit(0), n - 1),
-            F.lit(0.0),
-            lambda acc, i: acc + (F.get(a, i).cast("double")
-                                  * F.get(b, i).cast("double"))))
+    return (F.when(a.isNull() | b.isNull(), F.lit(None).cast("double"))
+             .when(n == 0, F.lit(0.0))
+             .otherwise(F.aggregate(
+                 F.sequence(F.lit(0), n - 1),
+                 F.lit(0.0),
+                 lambda acc, i: acc + (F.get(a, i).cast("double")
+                                       * F.get(b, i).cast("double")))))
 
 
 def make_ddot_arrow():

@@ -22,7 +22,9 @@ production default — production keeps the zero-overhead serial shape
 and the code-review contract that call sites are audit-sized. The
 fallback (not an assert) is deliberate: a guarded run still returns
 the same totally-ordered rows, so parity suites can run entirely under
-the guard.
+the guard. The bound is read and validated once, at import: a value that
+is not a non-negative integer fails the import with a message naming the
+variable, instead of a bare ``int()`` error in the middle of a plan.
 """
 
 from __future__ import annotations
@@ -32,9 +34,21 @@ import os
 from pyspark.sql import DataFrame
 
 
+def _serial_sort_guard() -> int | None:
+    raw = os.environ.get("SPARK_GRAFT_SERIAL_SORT_GUARD", "")
+    if not raw:
+        return None
+    if not raw.strip().isdecimal():
+        raise ValueError(
+            "SPARK_GRAFT_SERIAL_SORT_GUARD must be a non-negative integer "
+            f"row bound, got {raw!r}")
+    return int(raw)
+
+
+_GUARD = _serial_sort_guard()
+
+
 def final_sort(df: DataFrame, *cols: str) -> DataFrame:
-    guard = os.environ.get("SPARK_GRAFT_SERIAL_SORT_GUARD", "")
-    if guard:
-        if df.count() > int(guard):
-            return df.orderBy(*cols)
+    if _GUARD is not None and df.count() > _GUARD:
+        return df.orderBy(*cols)
     return df.repartition(1).sortWithinPartitions(*cols)

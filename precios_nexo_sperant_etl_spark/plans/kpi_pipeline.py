@@ -2,10 +2,10 @@
 records dump + the nested KPI document {cards, by_proyecto, by_estado}.
 
 The heavy work (counts, means, exact medians, value counts) happens in
-three Spark aggregations — grouped, combinable, one shuffle each. Only the
-final tiny per-group rows are collected to assemble the nested dict, which
-is a serving-layer document, not a dataset (at 100 TB the aggregate output
-is still ≤ |projects| rows).
+one Spark ``cube`` aggregate — grouped, one shuffle. Only its tiny
+per-group rows are collected to assemble the nested dict, which is a
+serving-layer document, not a dataset (at 100 TB the aggregate output is
+still ≤ |projects| × |states| rows).
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.kpi import kpi_by_group, kpi_cards, value_counts
+from ..functions.exact import davg
 
 
 def records(df: DataFrame, prefer: list[str] | None = None) -> DataFrame:
@@ -40,35 +40,49 @@ def kpi_document(df: DataFrame, price_col: str, project_col: str = "Proyecto",
     Matches the reference's shape and rounding (``round(x, 2)`` half-even
     → ``bround``); per-state counts are ordered count-desc exactly like
     ``value_counts()``.
+
+    Every number comes from ONE ``cube(project, state)`` aggregate and one
+    collect. Its ``grouping_id`` tells the grouping sets apart, which a
+    NULL project alone could not: 0 = (project, state) counts, 1 =
+    per-project cards, 2 = per-state counts, 3 = the global cards. A cube
+    over empty input returns no rows at all (unlike ``df.agg``), hence
+    the ``unidades_totales: 0`` default.
     """
     now = generated_at or dt.datetime.now().isoformat(timespec="seconds")
-    out: dict[str, Any] = {"generated_at": now, "cards": {},
-                           "by_proyecto": {}, "by_estado": {}}
+    price = F.col(price_col)
+    estado = F.coalesce(F.col(state_col).cast("string"), F.lit("__NA__"))
+    rows = (df.cube(F.col(project_col).alias("proyecto"), estado.alias("estado"))
+              .agg(F.grouping_id().alias("gid"),
+                   F.count(F.lit(1)).alias("n"),
+                   davg(price).alias("avg"),
+                   F.median(price).alias("median"))
+              .collect())
+    sets: dict[int, list] = {0: [], 1: [], 2: [], 3: []}
+    for r in rows:
+        sets[r["gid"]].append(r)
 
-    cards = kpi_cards(df, price_col).collect()[0]
-    out["cards"]["unidades_totales"] = cards["unidades_totales"]
-    if cards["precio_promedio"] is not None:
-        out["cards"]["precio_promedio"] = float(round(cards["precio_promedio"], 2))
-        out["cards"]["precio_median"] = float(round(cards["precio_median"], 2))
+    def stats(r, count_key: str) -> dict[str, Any]:
+        rec: dict[str, Any] = {count_key: r["n"]}
+        if r["avg"] is not None:
+            rec["precio_promedio"] = float(round(r["avg"], 2))
+            rec["precio_median"] = float(round(r["median"], 2))
+        return rec
 
-    per_project = kpi_by_group(df, project_col, price_col).collect()
-    states = (df.groupBy(project_col,
-                         F.coalesce(F.col(state_col).cast("string"),
-                                    F.lit("__NA__")).alias("estado"))
-                .count().collect())
-    state_map: dict[str, dict[str, int]] = {}
-    for r in states:
-        state_map.setdefault(r[project_col], {})[r["estado"]] = r["count"]
-    for r in sorted(per_project, key=lambda r: str(r[project_col])):
-        rec: dict[str, Any] = {"unidades": r["unidades"]}
-        if r["precio_promedio"] is not None:
-            rec["precio_promedio"] = float(round(r["precio_promedio"], 2))
-            rec["precio_median"] = float(round(r["precio_median"], 2))
-        by_state = state_map.get(r[project_col], {})
-        rec["por_estado"] = dict(
-            sorted(by_state.items(), key=lambda kv: (-kv[1], kv[0])))
-        out["by_proyecto"][r[project_col]] = rec
+    def count_desc(pairs) -> dict[str, int]:
+        return dict(sorted(pairs, key=lambda kv: (-kv[1], kv[0])))
 
-    out["by_estado"] = {
-        r["value"]: r["count"] for r in value_counts(df, state_col).collect()}
-    return out
+    state_counts: dict[Any, list[tuple[str, int]]] = {}
+    for r in sets[0]:
+        state_counts.setdefault(r["proyecto"], []).append((r["estado"], r["n"]))
+    by_proyecto: dict[Any, dict[str, Any]] = {}
+    for r in sorted(sets[1], key=lambda r: str(r["proyecto"])):
+        rec = stats(r, "unidades")
+        rec["por_estado"] = count_desc(state_counts[r["proyecto"]])
+        by_proyecto[r["proyecto"]] = rec
+    return {
+        "generated_at": now,
+        "cards": (stats(sets[3][0], "unidades_totales") if sets[3]
+                  else {"unidades_totales": 0}),
+        "by_proyecto": by_proyecto,
+        "by_estado": count_desc((r["estado"], r["n"]) for r in sets[2]),
+    }

@@ -4,9 +4,25 @@ as ``price_pipeline`` but with the real Nexo/Sperant column vocabulary,
 update rules, and audit outputs, so a user of the reference can run their
 actual workload on this engine.
 
-Lazy single-DAG design: stages 2-9 build one plan; the audit shares the
-enriched lineage. The Sperant dimension is deduped then broadcast; the
-Nexo fact side never shuffles before the final per-project aggregation.
+Materialized once, read many times. A refresh runs up to nine actions over
+these outputs (the partitioned table, three audit sheets, the records dump,
+the KPI document). Left lazy, each of them would re-plan and re-run the
+whole plan: the CRM dedup, the enrich join and the flag stages, and — for a
+CRM frame built from a driver-side list — re-fork Python workers to
+re-pickle the CRM rows. ``update_prices`` therefore ``localCheckpoint``s
+two relations, eagerly:
+
+- the CRM input, which the dedup and both project set-differences read;
+- the flagged frame (enriched, updated, match- and change-flagged), which
+  ``updated``, ``resumen`` and ``detalle`` read.
+
+A local checkpoint stores its blocks ``MEMORY_AND_DISK`` on the executors
+and truncates the lineage, so it degrades to disk at scale rather than
+failing. It registers nothing with the ``CacheManager``: the blocks are
+released by the ContextCleaner once the returned frames (and any frame
+derived from them) are garbage-collected, so no cache entry outlives the
+refresh. The Sperant dimension is deduped then broadcast; the Nexo fact
+side never shuffles before the final per-project aggregation.
 """
 
 from __future__ import annotations
@@ -80,6 +96,7 @@ def update_prices(nexo: DataFrame, sperant: DataFrame,
     - ``detalle``  — changed rows with ``_Antes``/``_Despues`` columns
     - ``solo_nexo`` / ``solo_sperant`` — project set differences (J4)
     """
+    sperant = sperant.localCheckpoint(eager=True)
     left = prepare_nexo(nexo)
     right = prepare_sperant(sperant, dedup_rule)
 
@@ -114,7 +131,8 @@ def update_prices(nexo: DataFrame, sperant: DataFrame,
         merged.withColumn("_precio_despues", F.col(COL_PRECIO).cast("double"))
               .withColumn("_estado_despues", F.col(COL_ESTADO)),
         price_before="_precio_antes", price_after="_precio_despues",
-        state_before="_estado_antes", state_after="_estado_despues")
+        state_before="_estado_antes", state_after="_estado_despues"
+    ).localCheckpoint(eager=True)
 
     resumen = audit_summary(flagged, group_col="Proyecto").orderBy("Proyecto")
 

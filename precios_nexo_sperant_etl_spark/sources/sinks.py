@@ -88,6 +88,12 @@ def write_audit_workbook(resumen: DataFrame, solo_nexo: DataFrame,
     ``Resumen`` / ``Solo_en_df_total`` / ``Solo_en_sperant``, fed by
     ``update_prices``' ``resumen``/``solo_nexo``/``solo_sperant`` outputs.
 
+    Each sheet is one collect. ``resumen`` aggregates the flagged frame
+    and the ``Solo_*`` sheets read the CRM input, both of which
+    ``update_prices`` has already materialized with ``localCheckpoint``;
+    so these collects re-run neither the dedup, join and flag stages nor
+    the Python workers that built the CRM rows.
+
     All three inputs are already reduced (≤ |projects| rows), so the
     driver-side ``toPandas`` is bounded regardless of fact-table scale —
     the same argument as the reference's own ``pd.ExcelWriter`` stage.

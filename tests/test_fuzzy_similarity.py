@@ -318,6 +318,20 @@ def test_arrow_ddot_matches_fold_and_is_deterministic(spark):
         assert abs(fa["cosine"] - fb["cosine"]) < 1e-9
 
 
+def test_ddot_null_and_empty_arrays(spark):
+    """A NULL array makes the dot product NULL even against an empty one,
+    as the old ``zip_with`` + ``aggregate`` form did; two empty arrays
+    fold to the init value 0.0."""
+    from precios_nexo_sperant_etl_spark.functions.exact import ddot
+    df = spark.createDataFrame(
+        [(0, None, []), (1, [], None), (2, [], []), (3, None, None),
+         (4, [1.0, 2.0], [3.0, 4.0])],
+        "i int, a array<float>, b array<float>")
+    got = {r["i"]: r["d"] for r in
+           df.select("i", ddot(F.col("a"), F.col("b")).alias("d")).collect()}
+    assert got == {0: None, 1: None, 2: 0.0, 3: None, 4: 11.0}
+
+
 def test_paragraph_dedup_keep_first_and_reassembly(spark):
     """Corpus-wide paragraph dedup: first occurrence (doc_id, pos) wins,
     repeats vanish, docs reassemble in original order, all-boilerplate

@@ -175,3 +175,42 @@ def _sheet_df(path, name):
     rows = read_xlsx_rows(path, sheet_name=name)
     header, data = rows[0], rows[1:]
     return {c: [r[i] for r in data] for i, c in enumerate(header)}
+
+
+# Jobs the refresh launched on this fixture before this budget existed:
+# a fully lazy update_prices, whose every action re-ran the
+# dedup/join/flag plan and re-pickled the CRM rows, plus a four-collect
+# kpi_document.
+SEED_REFRESH_JOBS = 55
+
+
+def test_refresh_job_budget(spark, tmp_path):
+    """One refresh on the fixture — update_prices, the three sinks and the
+    KPI document — launches at most half of ``SEED_REFRESH_JOBS``: the CRM
+    side and the flagged frame are materialized once, and the KPI
+    document is one aggregate with one collect."""
+    from precios_nexo_sperant_etl_spark.plans.kpi_pipeline import (
+        kpi_document, records)
+    from precios_nexo_sperant_etl_spark.sources.sinks import (
+        write_audit_workbook, write_json_records, write_partitioned)
+
+    nexo, sperant = _fixture(spark)
+    sc = spark.sparkContext
+    group = "refresh-job-budget"
+    sc.setJobGroup(group, "refresh job budget")
+    try:
+        out = update_prices(nexo, sperant)
+        front = ("Proyecto", COL_NUMERO, COL_PRECIO, COL_ESTADO)
+        write_partitioned(out["updated"], str(tmp_path / "tablas"),
+                          front_cols=front)
+        write_audit_workbook(out["resumen"], out["solo_nexo"],
+                             out["solo_sperant"],
+                             str(tmp_path / "Auditoria" / "Resumen.xlsx"))
+        write_json_records(records(out["updated"], prefer=list(front)),
+                           str(tmp_path / "records"))
+        doc = kpi_document(out["updated"], COL_PRECIO)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert doc["cards"]["unidades_totales"] == 5
+    assert len(jobs) <= SEED_REFRESH_JOBS // 2
