@@ -1,8 +1,10 @@
 """From-scratch MD5 (RFC 1321) and SHA-256 (FIPS 180-4).
 
 Completes the engine's from-scratch digest family (SHA-1 lives in
-``operators.gitpack``; CRC-32/Adler-32 in ``operators.deflatecodec``;
-CRC-32C in the tfrecord path; xxHash32/64 in ``operators.lz4codec``).
+``operators.gitpack``; the CRC family — CRC-32, CRC-32C, CRC-32/BZIP2,
+CRC-64/XZ, FLAC's CRC-8/16 — in ``operators.bitio``; Adler-32 in
+``operators.deflatecodec``; xxHash32 in ``operators.lz4codec`` and
+xxHash64 in ``operators.zstdentropy``).
 ``hashlib`` — OpenSSL's independent implementation — is the pin in
 ``tests/test_hashes.py``, and the driver-checked query
 ``scratch_hash_audit`` pins OUR md5 against DuckDB's ``md5()`` (a

@@ -30,7 +30,8 @@ here).
 
 from __future__ import annotations
 
-import heapq
+from .bitio import (MsbReader, MsbWriter, canonical_codes, crc32_bzip2,
+                    huffman_lengths)
 
 _BLOCK_MAGIC = 0x314159265359
 _EOS_MAGIC = 0x177245385090
@@ -39,140 +40,6 @@ _ENC_MAX_BLOCK = 1 << 15  # sorted-rotations BWT bound (post-RLE1 bytes)
 
 class Bzip2Error(ValueError):
     pass
-
-
-# --- CRC-32/BZIP2 -----------------------------------------------------------
-
-def _crc_table() -> list[int]:
-    tbl = []
-    for b in range(256):
-        c = b << 24
-        for _ in range(8):
-            c = ((c << 1) ^ 0x04C11DB7 if c & 0x80000000 else c << 1) \
-                & 0xFFFFFFFF
-        tbl.append(c)
-    return tbl
-
-
-_CRC_TBL = _crc_table()
-
-
-def _crc_slice8() -> list[list[int]]:
-    """Slice-by-8 tables: ``T[k][b]`` advances byte ``b`` through k
-    additional zero bytes, so 8 input bytes fold in one table round —
-    the standard Intel slicing construction, same polynomial, same
-    bit order (verified byte-for-byte against the 1-byte loop in
-    tests/test_bzip2.py)."""
-    tabs = [_CRC_TBL]
-    for _ in range(7):
-        prev = tabs[-1]
-        tabs.append([((prev[b] << 8) & 0xFFFFFFFF)
-                     ^ _CRC_TBL[(prev[b] >> 24) & 0xFF] for b in range(256)])
-    return tabs
-
-
-_CRC8 = _crc_slice8()
-
-
-def bz2_crc(data: bytes, crc: int = 0xFFFFFFFF) -> int:
-    t0, t1, t2, t3, t4, t5, t6, t7 = _CRC8
-    n8 = len(data) & ~7
-    i = 0
-    while i < n8:
-        hi = crc ^ int.from_bytes(data[i:i + 4], "big")
-        lo = int.from_bytes(data[i + 4:i + 8], "big")
-        crc = (t7[(hi >> 24) & 0xFF] ^ t6[(hi >> 16) & 0xFF]
-               ^ t5[(hi >> 8) & 0xFF] ^ t4[hi & 0xFF]
-               ^ t3[(lo >> 24) & 0xFF] ^ t2[(lo >> 16) & 0xFF]
-               ^ t1[(lo >> 8) & 0xFF] ^ t0[lo & 0xFF])
-        i += 8
-    for b in data[n8:]:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _CRC_TBL[((crc >> 24) ^ b) & 0xFF]
-    return crc
-
-
-def _crc_final(crc: int) -> int:
-    return crc ^ 0xFFFFFFFF
-
-
-# --- MSB-first bit I/O ------------------------------------------------------
-
-class _BitReader:
-    def __init__(self, data: bytes, pos_bits: int = 0) -> None:
-        self.d = data
-        self.p = pos_bits
-
-    def read(self, n: int) -> int:
-        # one int.from_bytes over the covering bytes instead of a
-        # per-bit loop (same MSB-first semantics, same IndexError on
-        # reads past the end)
-        p = self.p
-        end = p + n
-        d = self.d
-        b1 = (end + 7) >> 3
-        if b1 > len(d):
-            raise IndexError("bzip2: bit read past end of stream")
-        v = (int.from_bytes(d[p >> 3:b1], "big")
-             >> ((b1 << 3) - end)) & ((1 << n) - 1)
-        self.p = end
-        return v
-
-    def read1(self) -> int:
-        byte = self.d[self.p >> 3]
-        bit = (byte >> (7 - (self.p & 7))) & 1
-        self.p += 1
-        return bit
-
-    def peek(self, n: int) -> int:
-        """Next ``n`` bits MSB-first WITHOUT advancing; reads past the
-        end of the stream are zero-padded (the one-shot Huffman table
-        peeks a fixed width that can overrun the final code)."""
-        p = self.p
-        end = p + n
-        d = self.d
-        b1 = (end + 7) >> 3
-        chunk = d[p >> 3:b1]
-        short = b1 - (p >> 3) - len(chunk)
-        if short > 0:
-            chunk = chunk + b"\x00" * short
-        return (int.from_bytes(chunk, "big")
-                >> ((b1 << 3) - end)) & ((1 << n) - 1)
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nb = 0
-
-    def write(self, v: int, n: int) -> None:
-        self.acc = (self.acc << n) | (v & ((1 << n) - 1))
-        self.nb += n
-        while self.nb >= 8:
-            self.nb -= 8
-            self.out.append((self.acc >> self.nb) & 0xFF)
-        self.acc &= (1 << self.nb) - 1
-
-    def write_big(self, v: int, n: int) -> None:
-        """Append ``n`` bits of ``v`` in ONE int.to_bytes conversion —
-        the bulk path for pre-packed sections (the per-block Huffman
-        symbol stream): same bit stream as n calls to ``write``, minus
-        the per-call and per-byte Python overhead."""
-        total = (self.acc << n) | (v & ((1 << n) - 1))
-        nbt = self.nb + n
-        rem = nbt & 7
-        nbytes = (nbt - rem) >> 3
-        if nbytes:
-            self.out += (total >> rem).to_bytes(nbytes, "big")
-        self.acc = total & ((1 << rem) - 1)
-        self.nb = rem
-
-    def finish(self) -> bytes:
-        if self.nb:
-            self.out.append((self.acc << (8 - self.nb)) & 0xFF)
-            self.acc = 0
-            self.nb = 0
-        return bytes(self.out)
 
 
 # --- canonical Huffman (bzip2 style: lengths table -> limit/base/perm) ------
@@ -209,35 +76,26 @@ def _huff_decode_tables(lengths: list[int]):
         vec += count[ln]
         limit[ln] = vec - 1
         vec <<= 1
+    codes = canonical_codes(lengths)
     table = [0] * (1 << _HTBITS)
-    code = 0
-    idx = 0
-    for ln in range(min_len, max_len + 1):
+    for sym in perm:
+        ln = lengths[sym]
         if ln > _HTBITS:
             break
         width = 1 << (_HTBITS - ln)
-        for _ in range(count[ln]):
-            sym = perm[idx]
-            idx += 1
-            lo = code << (_HTBITS - ln)
-            table[lo:lo + width] = [(ln << 16) | sym] * width
-            code += 1
-        code <<= 1
+        lo = codes[sym] << (_HTBITS - ln)
+        table[lo:lo + width] = [(ln << 16) | sym] * width
     return min_len, max_len, limit, base, perm, table
 
 
-def _huff_read_symbol(br: _BitReader, tabs) -> int:
+def _huff_read_symbol(br: MsbReader, tabs) -> int:
     min_len, max_len, limit, base, perm, table = tabs
     entry = table[br.peek(_HTBITS)]
     if entry:
-        br.p += entry >> 16
         # peek() zero-pads past end-of-stream, so a truncated stream
-        # could advance p beyond the data and decode phantom symbols
-        # until a later CRC/magic gate; fail at the overrun instead,
-        # mirroring read()'s bound.
-        if br.p > len(br.d) * 8:
-            raise Bzip2Error("bzip2: truncated stream inside Huffman "
-                             "symbol")
+        # could advance pos beyond the data and decode phantom symbols
+        # until a later CRC/magic gate; skip() fails at the overrun.
+        br.skip(entry >> 16)
         return entry & 0xFFFF
     ln = min_len
     v = br.read(min_len)
@@ -249,48 +107,9 @@ def _huff_read_symbol(br: _BitReader, tabs) -> int:
     raise Bzip2Error("bzip2: invalid Huffman code")
 
 
-def _huff_lengths(freqs: list[int], max_len: int = 17) -> list[int]:
-    """Code lengths for the encoder: standard heap Huffman, then a
-    crude-but-valid rebalance if anything exceeds ``max_len`` (flatten
-    to ceil-log2 — always a legal prefix code for our small
-    alphabets). Every symbol gets a code (bzip2 requires it)."""
-    n = len(freqs)
-    if n == 1:
-        return [1]
-    heap = [(max(f, 1), i, (i,)) for i, f in enumerate(freqs)]
-    heapq.heapify(heap)
-    lens = [0] * n
-    while len(heap) > 1:
-        fa, ia, sa = heapq.heappop(heap)
-        fb, ib, sb = heapq.heappop(heap)
-        for s in sa + sb:
-            lens[s] += 1
-        heapq.heappush(heap, (fa + fb, min(ia, ib), sa + sb))
-    if max(lens) > max_len:
-        flat = max(1, (n - 1).bit_length())
-        if flat > max_len:
-            raise Bzip2Error("bzip2: alphabet too large to flatten")
-        lens = [flat] * n
-    return lens
-
-
-def _huff_codes(lengths: list[int]) -> list[int]:
-    """Canonical codes in the same (length, symbol-order) convention
-    the decoder's perm table walks."""
-    codes = [0] * len(lengths)
-    vec = 0
-    for ln in range(min(lengths), max(lengths) + 1):
-        for sym, sl in enumerate(lengths):
-            if sl == ln:
-                codes[sym] = vec
-                vec += 1
-        vec <<= 1
-    return codes
-
-
 # --- decoder ----------------------------------------------------------------
 
-def _decode_block(br: _BitReader, block_size100k: int) -> bytes:
+def _decode_block(br: MsbReader, block_size100k: int) -> bytes:
     stored_crc = br.read(32)
     if br.read1():
         raise Bzip2Error("bzip2: deprecated randomised blocks unsupported")
@@ -356,9 +175,9 @@ def _decode_block(br: _BitReader, block_size100k: int) -> bytes:
     g_idx = -1
     g_left = 0
     table = None
-    dpad = br.d + b"\x00\x00\x00"
-    dbits = len(br.d) * 8
-    p = br.p
+    dpad = br.data + b"\x00\x00\x00"
+    dbits = br.nbits
+    p = br.pos
     n_sel_total = len(selectors)
     while True:
         if g_left == 0:
@@ -379,9 +198,9 @@ def _decode_block(br: _BitReader, block_size100k: int) -> bytes:
                                  "Huffman symbol")
             sym = entry & 0xFFFF
         else:
-            br.p = p
+            br.pos = p
             sym = _huff_read_symbol(br, tabs)
-            p = br.p
+            p = br.pos
         if sym <= 1:                         # RUNA / RUNB
             run += (sym + 1) << run_bit
             run_bit += 1
@@ -397,7 +216,7 @@ def _decode_block(br: _BitReader, block_size100k: int) -> bytes:
         bwt.append(v)
         if len(bwt) > limit:
             raise Bzip2Error("bzip2: block overflows its size class")
-    br.p = p
+    br.pos = p
     if run:
         bwt.extend(bytes([mtf[0]]) * run)
     n = len(bwt)
@@ -443,7 +262,7 @@ def _decode_block(br: _BitReader, block_size100k: int) -> bytes:
             else:
                 plain.extend(out[i:j])
                 i = j
-    if _crc_final(bz2_crc(bytes(plain))) != stored_crc:
+    if crc32_bzip2(plain) != stored_crc:
         raise Bzip2Error("bzip2: block CRC mismatch")
     return bytes(plain)
 
@@ -461,10 +280,10 @@ def decode_bzip2(blob: bytes) -> dict:
             raise Bzip2Error("bzip2: bad stream magic")
         if blob[pos + 2:pos + 3] != b"h":
             raise Bzip2Error("bzip2: only the 'h' (Huffman) format exists")
-        level = blob[pos + 3] - 0x30
+        level = blob[pos + 3] - 0x30 if pos + 3 < len(blob) else 0
         if not 1 <= level <= 9:
             raise Bzip2Error("bzip2: bad block-size level")
-        br = _BitReader(blob, (pos + 4) * 8)
+        br = MsbReader(blob, (pos + 4) * 8, Bzip2Error)
         combined = 0
         while True:
             magic = br.read(48)
@@ -473,7 +292,7 @@ def decode_bzip2(blob: bytes) -> dict:
                 out.extend(blk)
                 n_blocks += 1
                 combined = (((combined << 1) | (combined >> 31))
-                            & 0xFFFFFFFF) ^ _crc_final(bz2_crc(blk))
+                            & 0xFFFFFFFF) ^ crc32_bzip2(blk)
             elif magic == _EOS_MAGIC:
                 stored = br.read(32)
                 if stored != combined:
@@ -482,7 +301,7 @@ def decode_bzip2(blob: bytes) -> dict:
             else:
                 raise Bzip2Error("bzip2: bad block magic")
         n_streams += 1
-        pos = (br.p + 7) >> 3               # streams are byte-aligned
+        pos = (br.pos + 7) >> 3               # streams are byte-aligned
     if not n_streams:
         raise Bzip2Error("bzip2: empty input")
     return {"content": bytes(out), "n_streams": n_streams,
@@ -574,7 +393,7 @@ def encode_bzip2(data: bytes) -> bytes:
     empty-payload stream but record sinks never need one here)."""
     if not data:
         raise Bzip2Error("bzip2: empty payload")
-    w = _BitWriter()
+    w = MsbWriter()
     w.out.extend(b"BZh1")
     combined = 0
     # Split the PLAIN data and RLE1 each block independently — exactly
@@ -586,7 +405,7 @@ def encode_bzip2(data: bytes) -> bytes:
     for off in range(0, len(data), plain_quota):
         plain = data[off:off + plain_quota]
         rblk = _rle1(plain)
-        blk_crc = _crc_final(bz2_crc(bytes(plain)))
+        blk_crc = crc32_bzip2(plain)
         combined = (((combined << 1) | (combined >> 31))
                     & 0xFFFFFFFF) ^ blk_crc
         bwt, orig_ptr = _bwt(rblk)
@@ -620,8 +439,9 @@ def encode_bzip2(data: bytes) -> bytes:
         freqs = [0] * alpha
         for s in syms:
             freqs[s] += 1
-        lens = _huff_lengths(freqs)
-        codes = _huff_codes(lens)
+        # every symbol needs a code in bzip2, hence the floor of 1
+        lens = huffman_lengths([max(f, 1) for f in freqs], 17)
+        codes = canonical_codes(lens)
         n_sel = (len(syms) + 49) // 50
         w.write(_BLOCK_MAGIC, 48)
         w.write(blk_crc, 32)

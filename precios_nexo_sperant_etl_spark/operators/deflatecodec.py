@@ -22,6 +22,9 @@ driver-checked roundtrip surface.
 
 from __future__ import annotations
 
+from .bitio import (LsbReader, LsbWriter, canonical_codes, crc32,
+                    huffman_lengths, reverse_bits)
+
 _LEN_BASE = [3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31,
              35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258]
 _LEN_EXTRA = [0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2,
@@ -51,120 +54,14 @@ def adler32(data: bytes) -> int:
     return (b << 16) | a
 
 
-def _mk_crc32():
-    tbl = []
-    for b in range(256):
-        c = b
-        for _ in range(8):
-            c = (c >> 1) ^ 0xEDB88320 if c & 1 else c >> 1
-        tbl.append(c)
-    return tbl
-
-
-_CRC_TBL = _mk_crc32()
-
-
-def crc32(data: bytes) -> int:
-    c = 0xFFFFFFFF
-    for b in data:
-        c = (c >> 8) ^ _CRC_TBL[(c ^ b) & 0xFF]
-    return c ^ 0xFFFFFFFF
-
-
-# --- LSB-first bit I/O -------------------------------------------------------
-
-class _BitReader:
-    __slots__ = ("d", "pos", "nbits")
-
-    def __init__(self, data: bytes) -> None:
-        self.d = data
-        self.pos = 0                          # bit position
-        self.nbits = len(data) << 3
-
-    def bits(self, n: int) -> int:
-        # one int.from_bytes over the covering bytes instead of a
-        # per-bit loop (same LSB-first semantics)
-        p = self.pos
-        end = p + n
-        if end > self.nbits:
-            raise DeflateError("deflate: truncated stream")
-        v = int.from_bytes(self.d[p >> 3:(end + 7) >> 3], "little") \
-            >> (p & 7)
-        self.pos = end
-        return v & ((1 << n) - 1)
-
-    def peek(self, n: int) -> int:
-        """Up to ``n`` look-ahead bits, zero-padded past the end (the
-        table decoder peeks a fixed width; codes that would need the
-        padding are rejected by the post-skip bounds check)."""
-        p = self.pos
-        return (int.from_bytes(self.d[p >> 3:(p + n + 7) >> 3],
-                               "little") >> (p & 7)) & ((1 << n) - 1)
-
-    def skip(self, n: int) -> None:
-        self.pos += n
-        if self.pos > self.nbits:
-            raise DeflateError("deflate: truncated stream")
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nb = 0
-
-    def bits(self, v: int, n: int) -> None:        # LSB-first
-        self.acc |= (v & ((1 << n) - 1)) << self.nb
-        self.nb += n
-        while self.nb >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nb -= 8
-
-    def huff(self, code: int, n: int) -> None:     # MSB-first (reversed)
-        rev = 0
-        for _ in range(n):
-            rev = (rev << 1) | (code & 1)
-            code >>= 1
-        self.bits(rev, n)
-
-    def align(self) -> None:
-        if self.nb:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.nb = 0
-
-    def finish(self) -> bytes:
-        self.align()
-        return bytes(self.out)
-
-
-# --- canonical Huffman -------------------------------------------------------
-
-def _codes_from_lengths(lengths: list[int]) -> list[int]:
-    """RFC 1951 §3.2.2 canonical code assignment."""
-    max_len = max(lengths) if lengths else 0
-    bl_count = [0] * (max_len + 1)
-    for ln in lengths:
-        if ln:
-            bl_count[ln] += 1
-    code = 0
-    next_code = [0] * (max_len + 1)
-    for b in range(1, max_len + 1):
-        code = (code + bl_count[b - 1]) << 1
-        next_code[b] = code
-    out = [0] * len(lengths)
-    for sym, ln in enumerate(lengths):
-        if ln:
-            out[sym] = next_code[ln]
-            next_code[ln] += 1
-    return out
-
-
 _TBITS = 10  # primary-table width (zlib-style one-shot decode)
+
+
+def _lsb_codes(lengths: list[int]) -> list[int]:
+    """Canonical codes bit-reversed: DEFLATE sends Huffman codes
+    MSB-first inside its LSB-first stream."""
+    return [reverse_bits(c, ln)
+            for c, ln in zip(canonical_codes(lengths), lengths)]
 
 
 class _Decoder:
@@ -204,31 +101,19 @@ class _Decoder:
             left = (left << 1) - counts[ln]
             if left < 0:
                 raise DeflateError("deflate: over-subscribed code")
-        # primary table over the canonical codes (RFC 1951 §3.2.2),
-        # bit-reversed because the stream delivers code MSB first into
-        # an LSB-first reader
+        # primary table over the canonical codes, bit-reversed because
+        # the stream delivers each code MSB first into an LSB-first reader
         table = [0] * (1 << _TBITS)
-        code = 0
-        idx = 0
-        for ln in range(1, max_len + 1):
-            for _ in range(counts[ln]):
-                sym = symbols[idx]
-                idx += 1
-                if ln <= _TBITS:
-                    rev = 0
-                    c = code
-                    for _b in range(ln):
-                        rev = (rev << 1) | (c & 1)
-                        c >>= 1
-                    # one strided slice store per symbol (C speed)
-                    # instead of a Python loop over the 2^(T-ln) copies
-                    table[rev::1 << ln] = \
-                        [(ln << 16) | sym] * (1 << (_TBITS - ln))
-                code += 1
-            code <<= 1
+        for sym, code in enumerate(_lsb_codes(lengths)):
+            ln = lengths[sym]
+            if 0 < ln <= _TBITS:
+                # one strided slice store per symbol (C speed) instead
+                # of a Python loop over the 2^(T-ln) copies
+                table[code::1 << ln] = \
+                    [(ln << 16) | sym] * (1 << (_TBITS - ln))
         self.table = table
 
-    def read(self, br: _BitReader) -> int:
+    def read(self, br: LsbReader) -> int:
         if self.max_len == 0:
             raise DeflateError("deflate: invalid Huffman code")
         entry = self.table[br.peek(_TBITS)]
@@ -237,12 +122,12 @@ class _Decoder:
             return entry & 0xFFFF
         return self._read_slow(br)
 
-    def _read_slow(self, br: _BitReader) -> int:
+    def _read_slow(self, br: LsbReader) -> int:
         code = 0
         first = 0
         index = 0
         for ln in range(1, self.max_len + 1):
-            code |= br.bits(1)
+            code |= br.read(1)
             count = self.counts[ln]
             if code - first < count:
                 return self.symbols[index + (code - first)]
@@ -254,8 +139,6 @@ class _Decoder:
 
 _STATIC_LIT = _Decoder([8] * 144 + [9] * 112 + [7] * 24 + [8] * 8)
 _STATIC_DIST = _Decoder([5] * 30)
-_STATIC_LIT_LENS = [8] * 144 + [9] * 112 + [7] * 24 + [8] * 8
-_STATIC_DIST_LENS = [5] * 30
 
 
 # --- inflate -----------------------------------------------------------------
@@ -269,12 +152,11 @@ def inflate_stream(data: bytes, offset: int = 0) -> tuple[bytes, int]:
     report the byte position just past its final block — the embedded-
     stream use (git packfiles concatenate zlib members back-to-back
     with no length framing; only the decoder knows where one ends)."""
-    br = _BitReader(data)
-    br.pos = offset << 3
+    br = LsbReader(data, offset << 3, DeflateError)
     out = bytearray()
     while True:
-        bfinal = br.bits(1)
-        btype = br.bits(2)
+        bfinal = br.read(1)
+        btype = br.read(2)
         if btype == 0:                        # stored
             br.align()
             p = br.pos >> 3
@@ -290,12 +172,12 @@ def inflate_stream(data: bytes, offset: int = 0) -> tuple[bytes, int]:
             if btype == 1:
                 lit_dec, dist_dec = _STATIC_LIT, _STATIC_DIST
             else:
-                hlit = br.bits(5) + 257
-                hdist = br.bits(5) + 1
-                hclen = br.bits(4) + 4
+                hlit = br.read(5) + 257
+                hdist = br.read(5) + 1
+                hclen = br.read(4) + 4
                 cl_lens = [0] * 19
                 for i in range(hclen):
-                    cl_lens[_CLC_ORDER[i]] = br.bits(3)
+                    cl_lens[_CLC_ORDER[i]] = br.read(3)
                 cl_dec = _Decoder(cl_lens)
                 lens: list[int] = []
                 while len(lens) < hlit + hdist:
@@ -305,11 +187,11 @@ def inflate_stream(data: bytes, offset: int = 0) -> tuple[bytes, int]:
                     elif sym == 16:
                         if not lens:
                             raise DeflateError("deflate: repeat at start")
-                        lens.extend([lens[-1]] * (3 + br.bits(2)))
+                        lens.extend([lens[-1]] * (3 + br.read(2)))
                     elif sym == 17:
-                        lens.extend([0] * (3 + br.bits(3)))
+                        lens.extend([0] * (3 + br.read(3)))
                     else:
-                        lens.extend([0] * (11 + br.bits(7)))
+                        lens.extend([0] * (11 + br.read(7)))
                 if len(lens) != hlit + hdist:
                     raise DeflateError("deflate: code-length overflow")
                 lit_dec = _Decoder(lens[:hlit])
@@ -324,11 +206,11 @@ def inflate_stream(data: bytes, offset: int = 0) -> tuple[bytes, int]:
                     if sym > 285:
                         raise DeflateError("deflate: bad length symbol")
                     li = sym - 257
-                    length = _LEN_BASE[li] + br.bits(_LEN_EXTRA[li])
+                    length = _LEN_BASE[li] + br.read(_LEN_EXTRA[li])
                     dsym = dist_dec.read(br)
                     if dsym > 29:
                         raise DeflateError("deflate: bad distance symbol")
-                    dist = _DIST_BASE[dsym] + br.bits(_DIST_EXTRA[dsym])
+                    dist = _DIST_BASE[dsym] + br.read(_DIST_EXTRA[dsym])
                     if dist > len(out):
                         raise DeflateError("deflate: distance too far back")
                     start = len(out) - dist
@@ -480,36 +362,6 @@ def _lz77(data: bytes, max_chain: int = 32):
     return tokens
 
 
-def _huff_lengths(freqs: list[int], max_len: int) -> list[int]:
-    """Huffman code lengths capped at ``max_len`` (flatten fallback,
-    valid for the DEFLATE alphabet sizes). Symbols with zero frequency
-    get length 0 (no code)."""
-    import heapq
-    live = [i for i, f in enumerate(freqs) if f]
-    if not live:
-        return [0] * len(freqs)
-    if len(live) == 1:
-        lens = [0] * len(freqs)
-        lens[live[0]] = 1
-        return lens
-    heap = [(freqs[i], i, (i,)) for i in live]
-    heapq.heapify(heap)
-    lens = [0] * len(freqs)
-    while len(heap) > 1:
-        fa, ia, sa = heapq.heappop(heap)
-        fb, ib, sb = heapq.heappop(heap)
-        for s in sa + sb:
-            lens[s] += 1
-        heapq.heappush(heap, (fa + fb, min(ia, ib), sa + sb))
-    if max(lens) > max_len:
-        flat = max(1, (len(live) - 1).bit_length())
-        if flat > max_len:
-            raise DeflateError("deflate: cannot flatten code")
-        for i in live:
-            lens[i] = flat
-    return lens
-
-
 def _encode_cl_rle(lens: list[int]):
     """RFC 1951 §3.2.7 code-length RLE: yields (symbol, extra, nbits)."""
     out = []
@@ -555,8 +407,8 @@ def deflate(data: bytes) -> bytes:
             lit_freq[257 + _len_code(a)] += 1
             dist_freq[_dist_code(b)] += 1
     lit_freq[256] += 1
-    lit_lens = _huff_lengths(lit_freq, 15)
-    dist_lens = _huff_lengths(dist_freq, 15)
+    lit_lens = huffman_lengths(lit_freq, 15)
+    dist_lens = huffman_lengths(dist_freq, 15)
     if max(dist_lens) == 0:
         dist_lens[0] = 1                      # at least one dist code
     hlit = 286
@@ -569,39 +421,26 @@ def deflate(data: bytes) -> bytes:
     cl_freq = [0] * 19
     for sym, _, _ in cl_seq:
         cl_freq[sym] += 1
-    cl_lens = _huff_lengths(cl_freq, 7)
+    cl_lens = huffman_lengths(cl_freq, 7)
     hclen = 19
     while hclen > 4 and cl_lens[_CLC_ORDER[hclen - 1]] == 0:
         hclen -= 1
-    # bit-reverse every code ONCE per tree (w.huff reversed per call —
-    # it was the hottest writer function); w.bits emits the reversed
-    # code directly
-    def _rev_codes(codes: list[int], lens: list[int]) -> list[int]:
-        out = [0] * len(codes)
-        for s, (c, ln) in enumerate(zip(codes, lens)):
-            r = 0
-            for _ in range(ln):
-                r = (r << 1) | (c & 1)
-                c >>= 1
-            out[s] = r
-        return out
-
-    lit_codes = _rev_codes(_codes_from_lengths(lit_lens), lit_lens)
-    dist_codes = _rev_codes(_codes_from_lengths(dist_lens), dist_lens)
-    cl_codes = _rev_codes(_codes_from_lengths(cl_lens), cl_lens)
-    w = _BitWriter()
-    w.bits(1, 1)                              # BFINAL
-    w.bits(2, 2)                              # dynamic
-    w.bits(hlit - 257, 5)
-    w.bits(hdist - 1, 5)
-    w.bits(hclen - 4, 4)
+    lit_codes = _lsb_codes(lit_lens)
+    dist_codes = _lsb_codes(dist_lens)
+    cl_codes = _lsb_codes(cl_lens)
+    w = LsbWriter()
+    w.write(1, 1)                             # BFINAL
+    w.write(2, 2)                             # dynamic
+    w.write(hlit - 257, 5)
+    w.write(hdist - 1, 5)
+    w.write(hclen - 4, 4)
     for i in range(hclen):
-        w.bits(cl_lens[_CLC_ORDER[i]], 3)
+        w.write(cl_lens[_CLC_ORDER[i]], 3)
     for sym, extra, nbits in cl_seq:
-        w.bits(cl_codes[sym], cl_lens[sym])
+        w.write(cl_codes[sym], cl_lens[sym])
         if nbits:
-            w.bits(extra, nbits)
-    wbits = w.bits
+            w.write(extra, nbits)
+    wbits = w.write
     for a, b in tokens:
         if b is None:
             wbits(lit_codes[a], lit_lens[a])
@@ -620,18 +459,18 @@ def deflate(data: bytes) -> bytes:
     stored_size = 1 + sum(5 + min(65535, max(1, len(data) - i))
                           for i in range(0, max(len(data), 1), 65535))
     if len(dyn) > stored_size:
-        w = _BitWriter()
+        w = LsbWriter()
         n = len(data)
         if n == 0:
-            w.bits(1, 1)
-            w.bits(0, 2)
+            w.write(1, 1)
+            w.write(0, 2)
             w.align()
             w.out.extend(b"\x00\x00\xff\xff")
             return w.finish()
         for i in range(0, n, 65535):
             chunk = data[i:i + 65535]
-            w.bits(1 if i + 65535 >= n else 0, 1)
-            w.bits(0, 2)
+            w.write(1 if i + 65535 >= n else 0, 1)
+            w.write(0, 2)
             w.align()
             w.out.extend(len(chunk).to_bytes(2, "little"))
             w.out.extend((~len(chunk) & 0xFFFF).to_bytes(2, "little"))

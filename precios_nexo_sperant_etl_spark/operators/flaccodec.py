@@ -36,6 +36,8 @@ from __future__ import annotations
 import hashlib
 import struct
 
+from .bitio import MsbReader, MsbWriter, crc8, crc16
+
 
 class UnsupportedFlac(ValueError):
     """Valid FLAC, outside the implemented subset (ValueError subclass
@@ -43,88 +45,13 @@ class UnsupportedFlac(ValueError):
     UnsupportedJpeg)."""
 
 
-class _BitWriter:
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        if nbits and not 0 <= value < (1 << nbits):
-            raise ValueError(f"value {value} does not fit {nbits} bits")
-        self.acc = (self.acc << nbits) | value
-        self.nbits += nbits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zeros then a one
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        if self.nbits:
-            raise ValueError("unaligned")
-        return bytes(self.buf)
-
-
-class _BitReader:
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.bitpos = pos * 8
-
-    def read(self, nbits: int) -> int:
-        out = 0
-        for _ in range(nbits):
-            byte = self.bitpos >> 3
-            if byte >= len(self.data):
-                raise ValueError("flac: truncated bitstream")
-            bit = 7 - (self.bitpos & 7)
-            out = (out << 1) | ((self.data[byte] >> bit) & 1)
-            self.bitpos += 1
-        return out
-
-    def read_unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-            if q > 1 << 20:
-                raise ValueError("flac: runaway unary code")
-        return q
-
-    def align(self) -> None:
-        self.bitpos = (self.bitpos + 7) & ~7
-
-    def bytepos(self) -> int:
-        if self.bitpos & 7:
-            raise ValueError("unaligned read position")
-        return self.bitpos >> 3
-
-
-def _crc8(data: bytes) -> int:
-    crc = 0
-    for b in data:
-        crc ^= b
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x07) & 0xFF if crc & 0x80 else (crc << 1) & 0xFF
-    return crc
-
-
-def _crc16(data: bytes) -> int:
-    crc = 0
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005) & 0xFFFF if crc & 0x8000 \
-                else (crc << 1) & 0xFFFF
-    return crc
+def _read_unary(r: MsbReader) -> int:
+    q = 0
+    while r.read1() == 0:
+        q += 1
+        if q > 1 << 20:
+            raise ValueError("flac: runaway unary code")
+    return q
 
 
 def _zigzag(v: int) -> int:
@@ -166,7 +93,7 @@ def encode_flac(samples: list[int], subframe: str, order: int = 0,
             raise ValueError("flac: sample out of 16-bit range")
 
     out = bytearray(b"fLaC")
-    si = _BitWriter()
+    si = MsbWriter()
     si.write(1, 1)              # last metadata block
     si.write(0, 7)              # STREAMINFO
     si.write(34, 24)            # length
@@ -178,9 +105,9 @@ def encode_flac(samples: list[int], subframe: str, order: int = 0,
     si.write(0, 3)              # channels - 1
     si.write(15, 5)             # bps - 1
     si.write(n, 36)             # total samples
-    out += si.bytes() + _samples_md5(samples)
+    out += si.finish() + _samples_md5(samples)
 
-    fh = _BitWriter()
+    fh = MsbWriter()
     fh.write(0b11111111111110, 14)  # sync
     fh.write(0, 1)              # reserved
     fh.write(0, 1)              # fixed-blocksize strategy
@@ -191,11 +118,11 @@ def encode_flac(samples: list[int], subframe: str, order: int = 0,
     fh.write(0, 1)              # reserved
     fh.write(0, 8)              # coded frame number 0 (UTF-8 1-byte)
     fh.write(n - 1, 8)          # blocksize - 1
-    header = fh.bytes()
+    header = fh.finish()
     frame = bytearray(header)
-    frame.append(_crc8(header))
+    frame.append(crc8(header))
 
-    sf = _BitWriter()
+    sf = MsbWriter()
     sf.write(0, 1)              # zero pad bit
     if subframe == "constant":
         if any(s != samples[0] for s in samples):
@@ -222,14 +149,13 @@ def encode_flac(samples: list[int], subframe: str, order: int = 0,
         for i in range(order, n):
             pred = sum(c * samples[i - 1 - j] for j, c in enumerate(coef))
             z = _zigzag(samples[i] - pred)
-            sf.write_unary(z >> rice)
+            sf.write(1, (z >> rice) + 1)  # unary: q zeros then a one
             if rice:
                 sf.write(z & ((1 << rice) - 1), rice)
     else:
         raise ValueError(f"unknown subframe type {subframe!r}")
-    sf.align()
-    frame += sf.bytes()
-    frame += struct.pack(">H", _crc16(bytes(frame)))
+    frame += sf.finish()
+    frame += struct.pack(">H", crc16(bytes(frame)))
     return bytes(out) + bytes(frame)
 
 
@@ -261,7 +187,7 @@ def decode_flac(payload: bytes) -> dict:
             break
     if streaminfo is None:
         raise ValueError("flac: missing STREAMINFO")
-    r = _BitReader(streaminfo)
+    r = MsbReader(streaminfo)
     min_bs, max_bs = r.read(16), r.read(16)
     r.read(24), r.read(24)
     rate = r.read(20)
@@ -274,7 +200,7 @@ def decode_flac(payload: bytes) -> dict:
     if total != _BLOCKSIZE or min_bs != _BLOCKSIZE or max_bs != _BLOCKSIZE:
         raise UnsupportedFlac("subset is one 64-sample frame")
 
-    fr = _BitReader(payload, pos)
+    fr = MsbReader(payload, pos * 8)
     if fr.read(14) != 0b11111111111110:
         raise ValueError("flac: bad frame sync")
     fr.read(1)
@@ -288,8 +214,8 @@ def decode_flac(payload: bytes) -> dict:
     n = fr.read(8) + 1
     if sr_code != 0b0100 or ch_code != 0 or ss_code != 0b100:
         raise UnsupportedFlac("subset is mono 16-bit 8kHz")
-    hdr_end = fr.bytepos()
-    if _crc8(payload[pos:hdr_end]) != fr.read(8):
+    hdr_end = fr.pos >> 3
+    if crc8(payload[pos:hdr_end]) != fr.read(8):
         raise ValueError("flac: frame header CRC-8 mismatch")
 
     if fr.read(1) != 0:
@@ -321,7 +247,7 @@ def decode_flac(payload: bytes) -> dict:
             raise UnsupportedFlac("escaped residuals outside subset")
         coef = _FIXED_COEF[order]
         for _ in range(n - order):
-            z = (fr.read_unary() << rice) | (fr.read(rice) if rice else 0)
+            z = (_read_unary(fr) << rice) | (fr.read(rice) if rice else 0)
             resid = _unzigzag(z)
             pred = sum(c * samples[len(samples) - 1 - j]
                        for j, c in enumerate(coef))
@@ -333,10 +259,10 @@ def decode_flac(payload: bytes) -> dict:
         raise UnsupportedFlac(f"subframe type {stype:06b} outside subset")
 
     fr.align()
-    crc_at = fr.bytepos()
+    crc_at = fr.pos >> 3
     if crc_at + 2 > len(payload):
         raise ValueError("flac: truncated frame CRC")
-    if _crc16(payload[pos:crc_at]) != int.from_bytes(
+    if crc16(payload[pos:crc_at]) != int.from_bytes(
             payload[crc_at:crc_at + 2], "big"):
         raise ValueError("flac: frame CRC-16 mismatch")
     md5_ok = _samples_md5(samples) == md5_expect

@@ -1,10 +1,11 @@
-"""From-scratch LZ4 block + frame codec and xxHash32/64.
+"""From-scratch LZ4 block + frame codec and xxHash32.
 
 Implements the public LZ4 specifications (lz4_Block_format.md v1.0 and
-lz4_Frame_format.md v1.6.3, Yann Collet) plus the xxHash32/64 spec the
-frame format's checksums require. No lz4 library is imported anywhere;
-the interop pins in ``tests/test_lz4.py`` run against the INDEPENDENT
-``lz4-java`` implementation bundled with Spark (``net.jpountz.lz4`` /
+lz4_Frame_format.md v1.6.3, Yann Collet) plus the xxHash32 spec the
+frame format's checksums require (xxHash64 lives in ``zstdentropy``).
+No lz4 library is imported anywhere; the interop pins in
+``tests/test_lz4.py`` run against the INDEPENDENT ``lz4-java``
+implementation bundled with Spark (``net.jpountz.lz4`` /
 ``net.jpountz.xxhash``) — our decoder decodes lz4-java fast/HC/frame
 output and lz4-java decodes ours, both directions, so the encoder and
 decoder cannot share a wrong table (the blind spot the r10 interop
@@ -35,7 +36,6 @@ from __future__ import annotations
 import struct
 
 _M32 = 0xFFFFFFFF
-_M64 = 0xFFFFFFFFFFFFFFFF
 
 
 class Lz4Error(ValueError):
@@ -43,7 +43,7 @@ class Lz4Error(ValueError):
 
 
 # ---------------------------------------------------------------------------
-# xxHash32 / xxHash64 (spec: xxhash_spec.md, Yann Collet)
+# xxHash32 (spec: xxhash_spec.md, Yann Collet)
 # ---------------------------------------------------------------------------
 
 _P32_1 = 2654435761
@@ -90,64 +90,6 @@ def xxh32(data: bytes, seed: int = 0) -> int:
     acc ^= acc >> 13
     acc = (acc * _P32_3) & _M32
     acc ^= acc >> 16
-    return acc
-
-
-_P64_1 = 11400714785074694791
-_P64_2 = 14029467366897019727
-_P64_3 = 1609587929392839161
-_P64_4 = 9650029242287828579
-_P64_5 = 2870177450012600261
-
-
-def _rotl64(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _round64(acc: int, lane: int) -> int:
-    return (_rotl64((acc + lane * _P64_2) & _M64, 31) * _P64_1) & _M64
-
-
-def xxh64(data: bytes, seed: int = 0) -> int:
-    n = len(data)
-    pos = 0
-    if n >= 32:
-        a1 = (seed + _P64_1 + _P64_2) & _M64
-        a2 = (seed + _P64_2) & _M64
-        a3 = seed & _M64
-        a4 = (seed - _P64_1) & _M64
-        lim = n - 32
-        while pos <= lim:
-            l1, l2, l3, l4 = struct.unpack_from("<QQQQ", data, pos)
-            a1 = _round64(a1, l1)
-            a2 = _round64(a2, l2)
-            a3 = _round64(a3, l3)
-            a4 = _round64(a4, l4)
-            pos += 32
-        acc = (_rotl64(a1, 1) + _rotl64(a2, 7)
-               + _rotl64(a3, 12) + _rotl64(a4, 18)) & _M64
-        for a in (a1, a2, a3, a4):
-            acc = ((acc ^ _round64(0, a)) * _P64_1 + _P64_4) & _M64
-    else:
-        acc = (seed + _P64_5) & _M64
-    acc = (acc + n) & _M64
-    while pos + 8 <= n:
-        (lane,) = struct.unpack_from("<Q", data, pos)
-        acc = (_rotl64(acc ^ _round64(0, lane), 27) * _P64_1 + _P64_4) & _M64
-        pos += 8
-    if pos + 4 <= n:
-        (lane,) = struct.unpack_from("<I", data, pos)
-        acc = (_rotl64(acc ^ (lane * _P64_1) & _M64, 23)
-               * _P64_2 + _P64_3) & _M64
-        pos += 4
-    while pos < n:
-        acc = (_rotl64(acc ^ (data[pos] * _P64_5) & _M64, 11) * _P64_1) & _M64
-        pos += 1
-    acc ^= acc >> 33
-    acc = (acc * _P64_2) & _M64
-    acc ^= acc >> 29
-    acc = (acc * _P64_3) & _M64
-    acc ^= acc >> 32
     return acc
 
 
@@ -342,6 +284,14 @@ def lz4_frame_compress(data: bytes, *, block_max_id: int = 4,
 
 
 def lz4_frame_decompress(blob: bytes) -> bytes:
+    try:
+        return _frame_decompress(blob)
+    except (IndexError, struct.error) as e:
+        # truncation runs a descriptor or size-field read off the end
+        raise Lz4Error("truncated frame") from e
+
+
+def _frame_decompress(blob: bytes) -> bytes:
     out = bytearray()
     pos = 0
     n = len(blob)

@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
+from .bitio import LsbReader, LsbWriter, MsbReader, MsbWriter
+
 #: Output schema of the feature-extraction pass.
 FEATURE_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -758,23 +760,6 @@ def parse_mp3_frames(payload: bytes) -> dict:
             "byte_len": n}
 
 
-class _SideBits:
-    """MSB-first bit reader over a side-info byte slice (bounded: at
-    most 32 bytes per frame, so no accumulator-growth hazard)."""
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.bitpos = 0
-
-    def take(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            byte = self.data[self.bitpos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.bitpos & 7))) & 1)
-            self.bitpos += 1
-        return v
-
-
 def parse_mp3_sideinfo(payload: bytes) -> dict:
     """Layer-III side-info walk + bit-reservoir consistency audit — the
     corrupt-stream taxonomy layer between the header walk
@@ -822,22 +807,22 @@ def parse_mp3_sideinfo(payload: bytes) -> dict:
         side_off = pos + 4 + crc
         if side_off + side_len > n:
             raise ValueError("side info overruns the frame")
-        rd = _SideBits(payload[side_off:side_off + side_len])
-        mdb = rd.take(9)
+        rd = MsbReader(payload[side_off:side_off + side_len])
+        mdb = rd.read(9)
         if mdb > reservoir:
             raise ValueError(
                 f"main_data_begin {mdb} exceeds reservoir {reservoir}")
-        rd.take(5 if mono else 3)        # private bits
+        rd.read(5 if mono else 3)        # private bits
         nch = 1 if mono else 2
-        rd.take(4 * nch)                 # scfsi
+        rd.read(4 * nch)                 # scfsi
         frame_part23 = 0
         for _gr in range(2):
             for _ch in range(nch):
-                p23 = rd.take(12)
-                bigv = rd.take(9)
+                p23 = rd.read(12)
+                bigv = rd.read(9)
                 if bigv > 288:
                     raise ValueError(f"big_values {bigv} > 288")
-                rd.take(38)              # rest of the 59-bit gr/ch block
+                rd.read(38)              # rest of the 59-bit gr/ch block
                 frame_part23 += p23
                 max_bigv = max(max_bigv, bigv)
         main_len = frame_len - 4 - crc - side_len
@@ -1259,21 +1244,7 @@ def _gif_lzw_decode(data: bytes, mcs: int) -> bytes:
     the LZW minimum code size from the image descriptor."""
     clear, eoi = 1 << mcs, (1 << mcs) + 1
     out = bytearray()
-    # LSB-first bit reader
-    acc = nbits = pos = 0
-
-    def take(w: int) -> int:
-        nonlocal acc, nbits, pos
-        while nbits < w:
-            if pos >= len(data):
-                raise ValueError("GIF LZW stream truncated")
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        v = acc & ((1 << w) - 1)
-        acc >>= w
-        nbits -= w
-        return v
+    r = LsbReader(data)
 
     def reset():
         d = [bytes((i,)) for i in range(1 << mcs)] + [b"", b""]
@@ -1282,7 +1253,7 @@ def _gif_lzw_decode(data: bytes, mcs: int) -> bytes:
     table, width = reset()
     prev: bytes | None = None
     while True:
-        code = take(width)
+        code = r.read(width)
         if code == clear:
             table, width = reset()
             prev = None
@@ -1313,31 +1284,21 @@ def _gif_lzw_encode(indices: bytes, mcs: int) -> bytes:
     decoder's width-growth rule (grow when the NEXT insertion index
     reaches 1<<width; reset at 4096)."""
     clear, eoi = 1 << mcs, (1 << mcs) + 1
-    out = bytearray()
-    acc = nbits = 0
-
-    def put(v: int, w: int) -> None:
-        nonlocal acc, nbits
-        acc |= v << nbits
-        nbits += w
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
+    bw = LsbWriter()
 
     def reset():
         return ({bytes((i,)): i for i in range(1 << mcs)},
                 (1 << mcs) + 2, mcs + 1)
 
     table, nxt, width = reset()
-    put(clear, width)
+    bw.write(clear, width)
     buf = b""
     for b in indices:
         cand = buf + bytes((b,))
         if cand in table:
             buf = cand
             continue
-        put(table[buf], width)
+        bw.write(table[buf], width)
         table[cand] = nxt
         nxt += 1
         # decoder inserts one step later, so it bumps width after
@@ -1347,15 +1308,13 @@ def _gif_lzw_encode(indices: bytes, mcs: int) -> bytes:
         if nxt == (1 << width) + 1 and width < 12:
             width += 1
         if nxt == 4097:                     # dictionary full
-            put(clear, width)
+            bw.write(clear, width)
             table, nxt, width = reset()
         buf = bytes((b,))
     if buf:
-        put(table[buf], width)
-    put(eoi, width)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
+        bw.write(table[buf], width)
+    bw.write(eoi, width)
+    return bw.finish()
 
 
 #: GIF interlace pass lattice: (y0, dy) per pass (spec appendix E).
@@ -1780,39 +1739,30 @@ def _tiff_lzw_encode(data: bytes) -> bytes:
     """Greedy TIFF-LZW: codes are written MSB-first; the code width
     bumps when the NEXT code to assign equals (1<<width)-1 (the spec's
     early-change rule, one earlier than GIF); table reset at 4094."""
-    out = bytearray()
-    acc = nb = 0
-
-    def put(v: int, w: int) -> None:
-        nonlocal acc, nb
-        acc = (acc << w) | v
-        nb += w
-        while nb >= 8:
-            nb -= 8
-            out.append((acc >> nb) & 0xFF)
+    bw = MsbWriter()
 
     def fresh():
         return {bytes([i]): i for i in range(256)}, 258, 9
 
     table, nxt, width = fresh()
-    put(256, width)                          # leading CLEAR
+    bw.write(256, width)                     # leading CLEAR
     w = b""
     for ch in data:
         wc = w + bytes([ch])
         if wc in table:
             w = wc
             continue
-        put(table[w], width)
+        bw.write(table[w], width)
         table[wc] = nxt
         nxt += 1
         if nxt == (1 << width) - 1 and width < 12:
             width += 1
         if nxt >= 4094:
-            put(256, width)                  # CLEAR: table is full
+            bw.write(256, width)             # CLEAR: table is full
             table, nxt, width = fresh()
         w = bytes([ch])
     if w:
-        put(table[w], width)
+        bw.write(table[w], width)
         # the decoder adds a table entry after EVERY data code — it
         # cannot know this one was the flush — so mirror that phantom
         # add before sizing the EOI code, or widths diverge exactly
@@ -1820,29 +1770,15 @@ def _tiff_lzw_encode(data: bytes) -> bytes:
         nxt += 1
         if nxt == (1 << width) - 1 and width < 12:
             width += 1
-    put(257, width)                          # EOI
-    if nb:
-        out.append((acc << (8 - nb)) & 0xFF)
-    return bytes(out)
+    bw.write(257, width)                     # EOI
+    return bw.finish()
 
 
 def _tiff_lzw_decode(data: bytes) -> bytes:
     """Mirror of :func:`_tiff_lzw_encode`: MSB-first reads, early-change
     width bumps, CLEAR resets, KwKwK handling, EOI termination."""
     out = bytearray()
-    pos = nb = acc = 0
-
-    def take(wd: int) -> int:
-        nonlocal pos, nb, acc
-        while nb < wd:
-            if pos >= len(data):
-                raise ValueError("LZW stream ran out before EOI")
-            acc = (acc << 8) | data[pos]
-            pos += 1
-            nb += 8
-        nb -= wd
-        v = (acc >> nb) & ((1 << wd) - 1)
-        return v
+    r = MsbReader(data)
 
     table: list[bytes] = []
     width = 9
@@ -1855,7 +1791,7 @@ def _tiff_lzw_decode(data: bytes) -> bytes:
 
     reset()
     while True:
-        code = take(width)
+        code = r.read(width)
         if code == 257:                      # EOI
             break
         if code == 256:                      # CLEAR
@@ -2561,62 +2497,35 @@ def parse_webm(payload: bytes) -> dict:
 # §7.3.2.1 (public).
 # ---------------------------------------------------------------------------
 
-class _BitWriterMSB:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def u(self, value: int, bits: int) -> None:
-        for i in range(bits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                self.acc = self.n = 0
-
-    def ue(self, value: int) -> None:          # exp-Golomb unsigned
-        code = value + 1
-        nbits = code.bit_length()
-        self.u(0, nbits - 1)
-        self.u(code, nbits)
-
-    def se(self, value: int) -> None:          # exp-Golomb signed (§9.1.1)
-        self.ue(2 * value - 1 if value > 0 else -2 * value)
-
-    def trailing(self) -> bytes:               # rbsp_stop_one_bit + pad
-        self.u(1, 1)
-        if self.n:
-            self.u(0, 8 - self.n)
-        return bytes(self.out)
+def _put_ue(w: MsbWriter, value: int) -> None:
+    """Unsigned exp-Golomb (§9.1): bit_length - 1 zeros, then the code."""
+    code = value + 1
+    w.write(code, 2 * code.bit_length() - 1)
 
 
-class _BitReaderMSB:
-    def __init__(self, data: bytes) -> None:
-        self.d = data
-        self.pos = 0
+def _put_se(w: MsbWriter, value: int) -> None:
+    """Signed exp-Golomb (§9.1.1)."""
+    _put_ue(w, 2 * value - 1 if value > 0 else -2 * value)
 
-    def u(self, bits: int) -> int:
-        if self.pos + bits > 8 * len(self.d):
-            raise ValueError("SPS bit read past the RBSP end")
-        v = 0
-        for _ in range(bits):
-            byte = self.d[self.pos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
 
-    def ue(self) -> int:
-        zeros = 0
-        while self.u(1) == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("exp-Golomb run too long")
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
+def _rbsp_trailing(w: MsbWriter) -> bytes:
+    """rbsp_stop_one_bit, then zero bits to the byte boundary."""
+    w.write(1, 1)
+    return w.finish()
 
-    def se(self) -> int:                       # exp-Golomb signed (§9.1.1)
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
+
+def _ue(r: MsbReader) -> int:
+    zeros = 0
+    while r.read1() == 0:
+        zeros += 1
+        if zeros > 31:
+            raise ValueError("exp-Golomb run too long")
+    return (1 << zeros) - 1 + r.read(zeros)
+
+
+def _se(r: MsbReader) -> int:
+    k = _ue(r)
+    return (k + 1) // 2 if k % 2 else -(k // 2)
 
 
 def _ep_escape(rbsp: bytes) -> bytes:
@@ -2664,49 +2573,49 @@ def encode_h264_annexb(width: int, height: int, n_idr: int = 1,
     h_mbs = (height + 15) // 16
     crop_r = (w_mbs * 16 - width) // 2
     crop_b = (h_mbs * 16 - height) // 2
-    w = _BitWriterMSB()
-    w.u(profile, 8)
-    w.u(0, 8)                                   # constraint flags
-    w.u(level, 8)
-    w.ue(0)                                     # sps id
-    w.ue(4)                                     # log2_max_frame_num-4
-    w.ue(2)                                     # pic_order_cnt_type
-    w.ue(1)                                     # max_num_ref_frames
-    w.u(0, 1)                                   # gaps allowed
-    w.ue(w_mbs - 1)
-    w.ue(h_mbs - 1)
-    w.u(1, 1)                                   # frame_mbs_only
-    w.u(1, 1)                                   # direct_8x8_inference
+    w = MsbWriter()
+    w.write(profile, 8)
+    w.write(0, 8)                               # constraint flags
+    w.write(level, 8)
+    _put_ue(w, 0)                               # sps id
+    _put_ue(w, 4)                               # log2_max_frame_num-4
+    _put_ue(w, 2)                               # pic_order_cnt_type
+    _put_ue(w, 1)                               # max_num_ref_frames
+    w.write(0, 1)                               # gaps allowed
+    _put_ue(w, w_mbs - 1)
+    _put_ue(w, h_mbs - 1)
+    w.write(1, 1)                               # frame_mbs_only
+    w.write(1, 1)                               # direct_8x8_inference
     if crop_r or crop_b:
-        w.u(1, 1)                               # frame_cropping_flag
-        w.ue(0)
-        w.ue(crop_r)
-        w.ue(0)
-        w.ue(crop_b)
+        w.write(1, 1)                           # frame_cropping_flag
+        _put_ue(w, 0)
+        _put_ue(w, crop_r)
+        _put_ue(w, 0)
+        _put_ue(w, crop_b)
     else:
-        w.u(0, 1)
-    w.u(0, 1)                                   # vui absent
-    sps = _ep_escape(w.trailing())
+        w.write(0, 1)
+    w.write(0, 1)                               # vui absent
+    sps = _ep_escape(_rbsp_trailing(w))
     # COMPLETE baseline PPS (§7.3.2.2, every mandatory field — r9
     # upgraded this from a 2-field stub so slice headers, which depend
     # on PPS flags, parse genuinely):
-    pw = _BitWriterMSB()
-    pw.ue(0)                                    # pps id
-    pw.ue(0)                                    # sps id
-    pw.u(0, 1)                                  # entropy_coding_mode (CAVLC)
-    pw.u(0, 1)                                  # bottom_field_poc_present
-    pw.ue(0)                                    # num_slice_groups - 1
-    pw.ue(0)                                    # num_ref_idx_l0_default - 1
-    pw.ue(0)                                    # num_ref_idx_l1_default - 1
-    pw.u(0, 1)                                  # weighted_pred_flag
-    pw.u(0, 2)                                  # weighted_bipred_idc
-    pw.se(0)                                    # pic_init_qp - 26
-    pw.se(0)                                    # pic_init_qs - 26
-    pw.se(0)                                    # chroma_qp_index_offset
-    pw.u(1, 1)                                  # deblocking_control_present
-    pw.u(0, 1)                                  # constrained_intra_pred
-    pw.u(0, 1)                                  # redundant_pic_cnt_present
-    pps = _ep_escape(pw.trailing())
+    pw = MsbWriter()
+    _put_ue(pw, 0)                              # pps id
+    _put_ue(pw, 0)                              # sps id
+    pw.write(0, 1)                              # entropy_coding_mode (CAVLC)
+    pw.write(0, 1)                              # bottom_field_poc_present
+    _put_ue(pw, 0)                              # num_slice_groups - 1
+    _put_ue(pw, 0)                              # num_ref_idx_l0_default - 1
+    _put_ue(pw, 0)                              # num_ref_idx_l1_default - 1
+    pw.write(0, 1)                              # weighted_pred_flag
+    pw.write(0, 2)                              # weighted_bipred_idc
+    _put_se(pw, 0)                              # pic_init_qp - 26
+    _put_se(pw, 0)                              # pic_init_qs - 26
+    _put_se(pw, 0)                              # chroma_qp_index_offset
+    pw.write(1, 1)                              # deblocking_control_present
+    pw.write(0, 1)                              # constrained_intra_pred
+    pw.write(0, 1)                              # redundant_pic_cnt_present
+    pps = _ep_escape(_rbsp_trailing(pw))
 
     def nal(ref_idc: int, typ: int, body: bytes, long_sc: bool) -> bytes:
         sc = b"\x00\x00\x00\x01" if long_sc else b"\x00\x00\x01"
@@ -2718,29 +2627,29 @@ def encode_h264_annexb(width: int, height: int, n_idr: int = 1,
         fields; macroblock data stays a stub byte after the header —
         the honest boundary, since entropy-decoding residuals needs
         the full CAVLC/CABAC stack."""
-        sw = _BitWriterMSB()
-        sw.ue(0)                                # first_mb_in_slice
-        sw.ue(7 if idr else 5)                  # slice_type (all-I / all-P)
-        sw.ue(0)                                # pic_parameter_set_id
-        sw.u(0 if idr else (idx + 1) & 0xFF, 8)  # frame_num (log2=8)
+        sw = MsbWriter()
+        _put_ue(sw, 0)                          # first_mb_in_slice
+        _put_ue(sw, 7 if idr else 5)            # slice_type (all-I / all-P)
+        _put_ue(sw, 0)                          # pic_parameter_set_id
+        sw.write(0 if idr else (idx + 1) & 0xFF, 8)  # frame_num (log2=8)
         if idr:
-            sw.ue(idx)                          # idr_pic_id
+            _put_ue(sw, idx)                    # idr_pic_id
         else:
-            sw.u(0, 1)                          # num_ref_idx_override
-            sw.u(0, 1)                          # ref_pic_list_mod_l0
+            sw.write(0, 1)                      # num_ref_idx_override
+            sw.write(0, 1)                      # ref_pic_list_mod_l0
         # dec_ref_pic_marking (nal_ref_idc != 0 for both slice kinds)
         if idr:
-            sw.u(0, 1)                          # no_output_of_prior_pics
-            sw.u(0, 1)                          # long_term_reference
+            sw.write(0, 1)                      # no_output_of_prior_pics
+            sw.write(0, 1)                      # long_term_reference
         else:
-            sw.u(0, 1)                          # adaptive_marking_mode
-        sw.se((idx % 5) - 2)                    # slice_qp_delta
-        sw.ue(idx % 2)                          # disable_deblocking_idc
+            sw.write(0, 1)                      # adaptive_marking_mode
+        _put_se(sw, (idx % 5) - 2)              # slice_qp_delta
+        _put_ue(sw, idx % 2)                    # disable_deblocking_idc
         if idx % 2 != 1:
-            sw.se(2)                            # alpha_c0_offset_div2
-            sw.se(-1)                           # beta_offset_div2
-        sw.u(0x5A ^ idx, 8)                     # stub macroblock byte
-        return _ep_escape(sw.trailing())
+            _put_se(sw, 2)                      # alpha_c0_offset_div2
+            _put_se(sw, -1)                     # beta_offset_div2
+        sw.write((0x5A ^ idx) & 0xFF, 8)        # stub macroblock byte
+        return _ep_escape(_rbsp_trailing(sw))
 
     out = bytearray()
     out += nal(3, 7, sps, True)
@@ -2775,54 +2684,53 @@ def encode_h264_ipcm(luma: bytes, cb: bytes, cr: bytes, width: int,
         raise ValueError("h264 I_PCM: chroma plane size mismatch")
     w_mbs, h_mbs = width // 16, height // 16
     # SPS (§7.3.2.1, baseline, poc_type 2, frame_mbs_only, no crop)
-    w = _BitWriterMSB()
-    w.u(66, 8)                                  # profile_idc baseline
-    w.u(0, 8)                                   # constraint flags
-    w.u(30, 8)                                  # level_idc
-    w.ue(0)                                     # sps id
-    w.ue(4)                                     # log2_max_frame_num - 4
-    w.ue(2)                                     # pic_order_cnt_type
-    w.ue(1)                                     # max_num_ref_frames
-    w.u(0, 1)                                   # gaps allowed
-    w.ue(w_mbs - 1)
-    w.ue(h_mbs - 1)
-    w.u(1, 1)                                   # frame_mbs_only
-    w.u(1, 1)                                   # direct_8x8_inference
-    w.u(0, 1)                                   # frame_cropping_flag
-    w.u(0, 1)                                   # vui absent
-    sps = _ep_escape(w.trailing())
-    pw = _BitWriterMSB()                        # PPS (§7.3.2.2)
-    pw.ue(0)                                    # pps id
-    pw.ue(0)                                    # sps id
-    pw.u(0, 1)                                  # CAVLC
-    pw.u(0, 1)                                  # bottom_field_poc_present
-    pw.ue(0)                                    # num_slice_groups - 1
-    pw.ue(0)                                    # num_ref_idx_l0_default - 1
-    pw.ue(0)                                    # num_ref_idx_l1_default - 1
-    pw.u(0, 1)                                  # weighted_pred_flag
-    pw.u(0, 2)                                  # weighted_bipred_idc
-    pw.se(0)                                    # pic_init_qp - 26
-    pw.se(0)                                    # pic_init_qs - 26
-    pw.se(0)                                    # chroma_qp_index_offset
-    pw.u(0, 1)                                  # deblocking control absent
-    pw.u(0, 1)                                  # constrained_intra_pred
-    pw.u(0, 1)                                  # redundant_pic_cnt_present
-    pps = _ep_escape(pw.trailing())
+    w = MsbWriter()
+    w.write(66, 8)                              # profile_idc baseline
+    w.write(0, 8)                               # constraint flags
+    w.write(30, 8)                              # level_idc
+    _put_ue(w, 0)                               # sps id
+    _put_ue(w, 4)                               # log2_max_frame_num - 4
+    _put_ue(w, 2)                               # pic_order_cnt_type
+    _put_ue(w, 1)                               # max_num_ref_frames
+    w.write(0, 1)                               # gaps allowed
+    _put_ue(w, w_mbs - 1)
+    _put_ue(w, h_mbs - 1)
+    w.write(1, 1)                               # frame_mbs_only
+    w.write(1, 1)                               # direct_8x8_inference
+    w.write(0, 1)                               # frame_cropping_flag
+    w.write(0, 1)                               # vui absent
+    sps = _ep_escape(_rbsp_trailing(w))
+    pw = MsbWriter()                            # PPS (§7.3.2.2)
+    _put_ue(pw, 0)                              # pps id
+    _put_ue(pw, 0)                              # sps id
+    pw.write(0, 1)                              # CAVLC
+    pw.write(0, 1)                              # bottom_field_poc_present
+    _put_ue(pw, 0)                              # num_slice_groups - 1
+    _put_ue(pw, 0)                              # num_ref_idx_l0_default - 1
+    _put_ue(pw, 0)                              # num_ref_idx_l1_default - 1
+    pw.write(0, 1)                              # weighted_pred_flag
+    pw.write(0, 2)                              # weighted_bipred_idc
+    _put_se(pw, 0)                              # pic_init_qp - 26
+    _put_se(pw, 0)                              # pic_init_qs - 26
+    _put_se(pw, 0)                              # chroma_qp_index_offset
+    pw.write(0, 1)                              # deblocking control absent
+    pw.write(0, 1)                              # constrained_intra_pred
+    pw.write(0, 1)                              # redundant_pic_cnt_present
+    pps = _ep_escape(_rbsp_trailing(pw))
     # IDR slice: header (§7.3.3) then all-I_PCM slice data (§7.3.4-5)
-    sw = _BitWriterMSB()
-    sw.ue(0)                                    # first_mb_in_slice
-    sw.ue(7)                                    # slice_type: I (all)
-    sw.ue(0)                                    # pic_parameter_set_id
-    sw.u(0, 8)                                  # frame_num (log2 = 8)
-    sw.ue(0)                                    # idr_pic_id
-    sw.u(0, 1)                                  # no_output_of_prior_pics
-    sw.u(0, 1)                                  # long_term_reference
-    sw.se(0)                                    # slice_qp_delta
+    sw = MsbWriter()
+    _put_ue(sw, 0)                              # first_mb_in_slice
+    _put_ue(sw, 7)                              # slice_type: I (all)
+    _put_ue(sw, 0)                              # pic_parameter_set_id
+    sw.write(0, 8)                              # frame_num (log2 = 8)
+    _put_ue(sw, 0)                              # idr_pic_id
+    sw.write(0, 1)                              # no_output_of_prior_pics
+    sw.write(0, 1)                              # long_term_reference
+    _put_se(sw, 0)                              # slice_qp_delta
     for mby in range(h_mbs):
         for mbx in range(w_mbs):
-            sw.ue(25)                           # mb_type I_PCM (I slice)
-            while sw.n:                         # pcm_alignment_zero_bit(s)
-                sw.u(0, 1)
+            _put_ue(sw, 25)                     # mb_type I_PCM (I slice)
+            sw.align()                          # pcm_alignment_zero_bit(s)
             # samples are byte-aligned now: write whole rows at once
             for y in range(16):                 # pcm_sample_luma
                 row = (mby * 16 + y) * width + mbx * 16
@@ -2831,7 +2739,7 @@ def encode_h264_ipcm(luma: bytes, cb: bytes, cr: bytes, width: int,
                 for y in range(8):
                     row = (mby * 8 + y) * (width // 2) + mbx * 8
                     sw.out += plane[row:row + 8]
-    slice_rbsp = _ep_escape(sw.trailing())
+    slice_rbsp = _ep_escape(_rbsp_trailing(sw))
     return (b"\x00\x00\x00\x01" + bytes([(3 << 5) | 7]) + sps
             + b"\x00\x00\x01" + bytes([(3 << 5) | 8]) + pps
             + b"\x00\x00\x01" + bytes([(3 << 5) | 5]) + slice_rbsp)
@@ -2853,20 +2761,20 @@ def decode_h264_ipcm(payload: bytes) -> dict:
             raise ValueError("empty NAL unit")
         typ = unit[0] & 0x1F
         if typ == 7 and dims is None:
-            r = _BitReaderMSB(_ep_unescape(unit[1:]))
-            r.u(24)                             # profile/constraints/level
-            r.ue()                              # sps id
-            log2_fn = r.ue() + 4
-            if r.ue() != 2:
+            r = MsbReader(_ep_unescape(unit[1:]))
+            r.read(24)                          # profile/constraints/level
+            _ue(r)                              # sps id
+            log2_fn = _ue(r) + 4
+            if _ue(r) != 2:
                 raise ValueError("h264 I_PCM: poc_type 2 only")
-            r.ue()                              # max_num_ref_frames
-            r.u(1)                              # gaps allowed
-            w_mbs = r.ue() + 1
-            h_mbs = r.ue() + 1
-            if r.u(1) != 1:
+            _ue(r)                              # max_num_ref_frames
+            r.read(1)                           # gaps allowed
+            w_mbs = _ue(r) + 1
+            h_mbs = _ue(r) + 1
+            if r.read(1) != 1:
                 raise ValueError("h264 I_PCM: frame_mbs_only required")
-            r.u(1)                              # direct_8x8
-            if r.u(1):
+            r.read(1)                           # direct_8x8
+            if r.read(1):
                 raise ValueError("h264 I_PCM: cropping unsupported")
             dims = (w_mbs, h_mbs, log2_fn)
         elif typ == 5:
@@ -2877,45 +2785,45 @@ def decode_h264_ipcm(payload: bytes) -> dict:
             luma = bytearray(width * height)
             cbp = bytearray(width * height // 4)
             crp = bytearray(width * height // 4)
-            r = _BitReaderMSB(_ep_unescape(unit[1:]))
-            if r.ue() != 0:
+            r = MsbReader(_ep_unescape(unit[1:]))
+            if _ue(r) != 0:
                 raise ValueError("h264 I_PCM: multi-slice unsupported")
-            st = r.ue()
+            st = _ue(r)
             if st % 5 != 2:                     # I slice
                 raise ValueError("h264 I_PCM: I slices only")
-            r.ue()                              # pps id
-            r.u(log2_fn)                        # frame_num
-            r.ue()                              # idr_pic_id
-            r.u(1)                              # no_output_of_prior_pics
-            r.u(1)                              # long_term_reference
-            r.se()                              # slice_qp_delta
+            _ue(r)                              # pps id
+            r.read(log2_fn)                     # frame_num
+            _ue(r)                              # idr_pic_id
+            r.read(1)                           # no_output_of_prior_pics
+            r.read(1)                           # long_term_reference
+            _se(r)                              # slice_qp_delta
             for mb in range(w_mbs * h_mbs):
-                if r.ue() != 25:
+                if _ue(r) != 25:
                     raise ValueError(
                         "h264 I_PCM: transform-coded macroblock — "
                         "codec-library boundary")
                 while r.pos & 7:                # pcm_alignment_zero_bit
-                    if r.u(1):
+                    if r.read(1):
                         raise ValueError(
                             "h264 I_PCM: nonzero alignment bit")
                 mbx, mby = mb % w_mbs, mb // w_mbs
                 # byte-aligned now: slice whole sample rows out of the
                 # RBSP instead of 384 bit-reader calls per macroblock
                 off = r.pos >> 3
-                if off + 384 > len(r.d):
+                if off + 384 > len(r.data):
                     raise ValueError("h264 I_PCM: truncated PCM samples")
                 for y in range(16):
                     row = (mby * 16 + y) * width + mbx * 16
-                    luma[row:row + 16] = r.d[off:off + 16]
+                    luma[row:row + 16] = r.data[off:off + 16]
                     off += 16
                 for plane in (cbp, crp):
                     for y in range(8):
                         row = (mby * 8 + y) * (width // 2) + mbx * 8
-                        plane[row:row + 8] = r.d[off:off + 8]
+                        plane[row:row + 8] = r.data[off:off + 8]
                         off += 8
                 r.pos = off << 3
                 n_mb += 1
-            if r.u(1) != 1:                     # rbsp_stop_one_bit
+            if r.read(1) != 1:                  # rbsp_stop_one_bit
                 raise ValueError("h264 I_PCM: missing stop bit")
             planes = (bytes(luma), bytes(cbp), bytes(crp))
             break
@@ -2974,29 +2882,29 @@ def parse_h264_annexb(payload: bytes) -> dict:
         typ = hdr & 0x1F
         census[typ] = census.get(typ, 0) + 1
         if typ == 7 and sps_fields is None:
-            r = _BitReaderMSB(_ep_unescape(unit[1:]))
-            profile = r.u(8)
-            r.u(8)
-            level = r.u(8)
-            r.ue()                              # sps id
-            r.ue()                              # log2_max_frame_num-4
-            poc_type = r.ue()
+            r = MsbReader(_ep_unescape(unit[1:]))
+            profile = r.read(8)
+            r.read(8)
+            level = r.read(8)
+            _ue(r)                              # sps id
+            _ue(r)                              # log2_max_frame_num-4
+            poc_type = _ue(r)
             if poc_type == 0:
-                r.ue()
+                _ue(r)
             elif poc_type == 1:
                 raise ValueError("poc_type 1 not supported here")
-            r.ue()                              # max_num_ref_frames
-            r.u(1)
-            w_mbs = r.ue() + 1
-            h_map = r.ue() + 1
-            frame_mbs_only = r.u(1)
+            _ue(r)                              # max_num_ref_frames
+            r.read(1)
+            w_mbs = _ue(r) + 1
+            h_map = _ue(r) + 1
+            frame_mbs_only = r.read(1)
             if not frame_mbs_only:
-                r.u(1)                          # mb_adaptive flag
-            r.u(1)                              # direct_8x8
-            crop = r.u(1)
+                r.read(1)                       # mb_adaptive flag
+            r.read(1)                           # direct_8x8
+            crop = r.read(1)
             cl = cr = ct = cb = 0
             if crop:
-                cl, cr, ct, cb = r.ue(), r.ue(), r.ue(), r.ue()
+                cl, cr, ct, cb = _ue(r), _ue(r), _ue(r), _ue(r)
             h_mbs = h_map * (1 if frame_mbs_only else 2)
             sps_fields = {
                 "profile_idc": profile, "level_idc": level,
@@ -3027,47 +2935,47 @@ def parse_h264_slice_headers(payload: bytes) -> list[dict]:
         typ = unit[0] & 0x1F
         ref_idc = (unit[0] >> 5) & 3
         if typ == 7 and sps is None:
-            r = _BitReaderMSB(_ep_unescape(unit[1:]))
-            r.u(24)                            # profile/constraints/level
-            r.ue()                             # sps id
-            log2_fn = r.ue() + 4
-            poc_type = r.ue()
+            r = MsbReader(_ep_unescape(unit[1:]))
+            r.read(24)                         # profile/constraints/level
+            _ue(r)                             # sps id
+            log2_fn = _ue(r) + 4
+            poc_type = _ue(r)
             if poc_type != 2:
                 raise ValueError("slice walk supports poc_type 2 only")
             sps = {"log2_max_frame_num": log2_fn}
         elif typ == 8 and pps is None:
-            r = _BitReaderMSB(_ep_unescape(unit[1:]))
-            r.ue()                             # pps id
-            r.ue()                             # sps id
-            if r.u(1):
+            r = MsbReader(_ep_unescape(unit[1:]))
+            _ue(r)                             # pps id
+            _ue(r)                             # sps id
+            if r.read(1):
                 raise ValueError("slice walk supports CAVLC only")
-            r.u(1)                             # bottom_field_poc_present
-            if r.ue() != 0:
+            r.read(1)                          # bottom_field_poc_present
+            if _ue(r) != 0:
                 raise ValueError("slice groups unsupported")
-            r.ue()                             # num_ref_idx_l0_default - 1
-            r.ue()                             # num_ref_idx_l1_default - 1
-            r.u(1)                             # weighted_pred_flag
-            r.u(2)                             # weighted_bipred_idc
-            pic_init_qp = 26 + r.se()
-            r.se()                             # pic_init_qs - 26
-            r.se()                             # chroma_qp_index_offset
-            deblock_present = r.u(1)
+            _ue(r)                             # num_ref_idx_l0_default - 1
+            _ue(r)                             # num_ref_idx_l1_default - 1
+            r.read(1)                          # weighted_pred_flag
+            r.read(2)                          # weighted_bipred_idc
+            pic_init_qp = 26 + _se(r)
+            _se(r)                             # pic_init_qs - 26
+            _se(r)                             # chroma_qp_index_offset
+            deblock_present = r.read(1)
             pps = {"pic_init_qp": pic_init_qp,
                    "deblock_present": deblock_present}
         elif typ in (1, 5):
             if sps is None or pps is None:
                 raise ValueError("slice before SPS/PPS")
             idr = typ == 5
-            r = _BitReaderMSB(_ep_unescape(unit[1:]))
-            first_mb = r.ue()
-            slice_type = r.ue()
-            r.ue()                             # pic_parameter_set_id
-            frame_num = r.u(sps["log2_max_frame_num"])
+            r = MsbReader(_ep_unescape(unit[1:]))
+            first_mb = _ue(r)
+            slice_type = _ue(r)
+            _ue(r)                             # pic_parameter_set_id
+            frame_num = r.read(sps["log2_max_frame_num"])
             row = {"nal_type": typ, "first_mb": first_mb,
                    "slice_type": slice_type, "frame_num": frame_num,
                    "idr_pic_id": None}
             if idr:
-                row["idr_pic_id"] = r.ue()
+                row["idr_pic_id"] = _ue(r)
             st5 = slice_type % 5
             if st5 in (3, 4):
                 # SP slices carry num_ref_idx override + ref-list
@@ -3078,30 +2986,30 @@ def parse_h264_slice_headers(payload: bytes) -> list[dict]:
                 raise ValueError("h264: SP/SI slices unsupported")
             if st5 in (0, 1):                  # P / B
                 if st5 == 1:
-                    r.u(1)                     # direct_spatial_mv_pred
-                if r.u(1):                     # num_ref_idx_override
-                    r.ue()
+                    r.read(1)                  # direct_spatial_mv_pred
+                if r.read(1):                  # num_ref_idx_override
+                    _ue(r)
                     if st5 == 1:
-                        r.ue()
-                if r.u(1):                     # ref_pic_list_mod_l0
+                        _ue(r)
+                if r.read(1):                  # ref_pic_list_mod_l0
                     raise ValueError("ref-list modification unsupported")
-                if st5 == 1 and r.u(1):
+                if st5 == 1 and r.read(1):
                     raise ValueError("ref-list modification unsupported")
             if idr:
-                r.u(1)                         # no_output_of_prior_pics
-                r.u(1)                         # long_term_reference
+                r.read(1)                      # no_output_of_prior_pics
+                r.read(1)                      # long_term_reference
             elif ref_idc != 0:
-                if r.u(1):                     # adaptive_marking_mode
+                if r.read(1):                  # adaptive_marking_mode
                     raise ValueError("adaptive ref marking unsupported")
-            qp_delta = r.se()
+            qp_delta = _se(r)
             row["slice_qp"] = pps["pic_init_qp"] + qp_delta
             row["qp_delta"] = qp_delta
             if pps["deblock_present"]:
-                idc = r.ue()
+                idc = _ue(r)
                 row["deblock_idc"] = idc
                 if idc != 1:
-                    row["alpha_offset"] = 2 * r.se()
-                    row["beta_offset"] = 2 * r.se()
+                    row["alpha_offset"] = 2 * _se(r)
+                    row["beta_offset"] = 2 * _se(r)
                 else:
                     row["alpha_offset"] = row["beta_offset"] = 0
             else:
@@ -3159,45 +3067,45 @@ def _av1_seq_header_rbsp(profile: int, level: int, width: int,
         raise ValueError("av1: profile must be 0/1/2")
     if not 8 <= level <= 23:
         raise ValueError("av1: fixture levels are 8..23")
-    w = _BitWriterMSB()
-    w.u(profile, 3)
-    w.u(0, 1)                                   # still_picture
-    w.u(0, 1)                                   # reduced_still_picture
-    w.u(0, 1)                                   # timing_info_present
-    w.u(0, 1)                                   # initial_display_delay
-    w.u(0, 5)                                   # operating_points_cnt-1
-    w.u(0, 12)                                  # operating_point_idc[0]
-    w.u(level, 5)                               # seq_level_idx[0]
-    w.u(0, 1)                                   # seq_tier (level > 7)
+    w = MsbWriter()
+    w.write(profile, 3)
+    w.write(0, 1)                               # still_picture
+    w.write(0, 1)                               # reduced_still_picture
+    w.write(0, 1)                               # timing_info_present
+    w.write(0, 1)                               # initial_display_delay
+    w.write(0, 5)                               # operating_points_cnt-1
+    w.write(0, 12)                              # operating_point_idc[0]
+    w.write(level, 5)                           # seq_level_idx[0]
+    w.write(0, 1)                               # seq_tier (level > 7)
     wb = max((width - 1).bit_length(), 1)
     hb = max((height - 1).bit_length(), 1)
-    w.u(wb - 1, 4)
-    w.u(hb - 1, 4)
-    w.u(width - 1, wb)
-    w.u(height - 1, hb)
-    w.u(0, 1)                                   # frame_id_numbers_present
-    w.u(1, 1)                                   # use_128x128_superblock
-    w.u(0, 1)                                   # enable_filter_intra
-    w.u(0, 1)                                   # enable_intra_edge_filter
-    w.u(0, 1)                                   # enable_interintra_compound
-    w.u(0, 1)                                   # enable_masked_compound
-    w.u(0, 1)                                   # enable_warped_motion
-    w.u(0, 1)                                   # enable_dual_filter
-    w.u(0, 1)                                   # enable_order_hint
-    w.u(0, 1)                                   # seq_choose_screen_content
-    w.u(0, 1)                                   # seq_force_screen_content=0
-    w.u(0, 1)                                   # enable_superres
-    w.u(1, 1)                                   # enable_cdef
-    w.u(0, 1)                                   # enable_restoration
+    w.write(wb - 1, 4)
+    w.write(hb - 1, 4)
+    w.write(width - 1, wb)
+    w.write(height - 1, hb)
+    w.write(0, 1)                               # frame_id_numbers_present
+    w.write(1, 1)                               # use_128x128_superblock
+    w.write(0, 1)                               # enable_filter_intra
+    w.write(0, 1)                               # enable_intra_edge_filter
+    w.write(0, 1)                               # enable_interintra_compound
+    w.write(0, 1)                               # enable_masked_compound
+    w.write(0, 1)                               # enable_warped_motion
+    w.write(0, 1)                               # enable_dual_filter
+    w.write(0, 1)                               # enable_order_hint
+    w.write(0, 1)                               # seq_choose_screen_content
+    w.write(0, 1)                               # seq_force_screen_content=0
+    w.write(0, 1)                               # enable_superres
+    w.write(1, 1)                               # enable_cdef
+    w.write(0, 1)                               # enable_restoration
     # color_config, 8-bit:
-    w.u(0, 1)                                   # high_bitdepth
+    w.write(0, 1)                               # high_bitdepth
     if profile != 1:
-        w.u(0, 1)                               # mono_chrome (profile 1: =0)
-    w.u(0, 1)                                   # color_description_present
+        w.write(0, 1)                           # mono_chrome (profile 1: =0)
+    w.write(0, 1)                               # color_description_present
     # §5.5.2: with color_description_present_flag=0 the stream is
     # neither monochrome nor sRGB, so color_range f(1) comes next,
     # BEFORE the profile-implied subsampling / chroma position
-    w.u(0, 1)                                   # color_range (studio swing)
+    w.write(0, 1)                               # color_range (studio swing)
     if profile == 0:
         sx = sy = 1
     elif profile == 1:
@@ -3205,10 +3113,10 @@ def _av1_seq_header_rbsp(profile: int, level: int, width: int,
     else:
         sx, sy = 1, 0
     if sx and sy:
-        w.u(0, 2)                               # chroma_sample_position
-    w.u(0, 1)                                   # separate_uv_delta_q
-    w.u(0, 1)                                   # film_grain_params_present
-    return w.trailing()
+        w.write(0, 2)                           # chroma_sample_position
+    w.write(0, 1)                               # separate_uv_delta_q
+    w.write(0, 1)                               # film_grain_params_present
+    return _rbsp_trailing(w)
 
 
 def encode_av1_obu_stream(profile: int, level: int, width: int,
@@ -3258,49 +3166,49 @@ def parse_av1_obu_stream(payload: bytes) -> dict:
         if typ == 6:
             frame_bytes += size
         if typ == 1 and seq is None:
-            r = _BitReaderMSB(body)
-            profile = r.u(3)
-            r.u(1)                              # still_picture
-            if r.u(1):
+            r = MsbReader(body)
+            profile = r.read(3)
+            r.read(1)                           # still_picture
+            if r.read(1):
                 raise ValueError("av1: reduced header not in the subset")
-            if r.u(1) or r.u(1):
+            if r.read(1) or r.read(1):
                 raise ValueError("av1: timing/display-delay not in subset")
-            if r.u(5) != 0:
+            if r.read(5) != 0:
                 raise ValueError("av1: multi-operating-point not in subset")
-            r.u(12)                             # operating_point_idc
-            level = r.u(5)
+            r.read(12)                          # operating_point_idc
+            level = r.read(5)
             if level > 7:
-                r.u(1)                          # seq_tier
-            wb = r.u(4) + 1
-            hb = r.u(4) + 1
-            width = r.u(wb) + 1
-            height = r.u(hb) + 1
-            r.u(1)                              # frame_id_numbers
-            use_128 = r.u(1)
-            r.u(6)                              # enable_* block
-            if r.u(1):                          # enable_order_hint
+                r.read(1)                       # seq_tier
+            wb = r.read(4) + 1
+            hb = r.read(4) + 1
+            width = r.read(wb) + 1
+            height = r.read(hb) + 1
+            r.read(1)                           # frame_id_numbers
+            use_128 = r.read(1)
+            r.read(6)                           # enable_* block
+            if r.read(1):                       # enable_order_hint
                 raise ValueError("av1: order hints not in the subset")
-            if r.u(1) == 0:                     # seq_choose_screen_content
-                r.u(1)                          # seq_force_screen_content
-            r.u(1)                              # enable_superres
-            r.u(1)                              # enable_cdef
-            r.u(1)                              # enable_restoration
-            if r.u(1):                          # high_bitdepth
+            if r.read(1) == 0:                  # seq_choose_screen_content
+                r.read(1)                       # seq_force_screen_content
+            r.read(1)                           # enable_superres
+            r.read(1)                           # enable_cdef
+            r.read(1)                           # enable_restoration
+            if r.read(1):                       # high_bitdepth
                 raise ValueError("av1: >8-bit not in the subset")
-            mono = r.u(1) if profile != 1 else 0
+            mono = r.read(1) if profile != 1 else 0
             if mono:
                 raise ValueError("av1: monochrome not in the subset")
-            if r.u(1):                          # color_description_present
-                cp = r.u(8)                     # color_primaries
-                tc = r.u(8)                     # transfer_characteristics
-                mc = r.u(8)                     # matrix_coefficients
+            if r.read(1):                       # color_description_present
+                cp = r.read(8)                  # color_primaries
+                tc = r.read(8)                  # transfer_characteristics
+                mc = r.read(8)                  # matrix_coefficients
                 is_srgb = cp == 1 and tc == 13 and mc == 0
             else:
                 is_srgb = False
             if is_srgb:                         # §5.5.2: implied full range,
                 color_range, sx, sy = 1, 0, 0   # 4:4:4, no chroma position
             else:
-                color_range = r.u(1)
+                color_range = r.read(1)
                 if profile == 0:
                     sx = sy = 1
                 elif profile == 1:
@@ -3308,7 +3216,7 @@ def parse_av1_obu_stream(payload: bytes) -> dict:
                 else:
                     sx, sy = 1, 0
                 if sx and sy:
-                    r.u(2)                      # chroma_sample_position
+                    r.read(2)                   # chroma_sample_position
             seq = {"profile": profile, "level": level,
                    "max_width": width, "max_height": height,
                    "subsampling_x": sx, "subsampling_y": sy,

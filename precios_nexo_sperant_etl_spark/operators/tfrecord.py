@@ -6,8 +6,8 @@ dependency. Beyond-reference capability (SURVEY §2.8): the reference
 repo (dinatalediego/precios-nexo-sperant-etl) has no binary-container surface at all.
 
 Pieces:
-- CRC32C (Castagnoli, reflected poly 0x82F63B78) + TFRecord's masked
-  CRC, table-driven, from scratch.
+- TFRecord's masked CRC over CRC32C (Castagnoli, reflected poly
+  0x82F63B78; the table-driven CRC is ``operators.bitio.crc32c``).
 - TFRecord framing: len(u64 LE) | masked_crc(len) | data |
   masked_crc(data).
 - A real protobuf wire-format walker (varints, 64/32-bit fields,
@@ -25,27 +25,7 @@ from __future__ import annotations
 
 import struct
 
-_CRC_TBL: list[int] = []
-
-
-def _crc_table() -> list[int]:
-    if not _CRC_TBL:
-        for i in range(256):
-            c = i
-            for _ in range(8):
-                c = (c >> 1) ^ 0x82F63B78 if c & 1 else c >> 1
-            _CRC_TBL.append(c)
-    return _CRC_TBL
-
-
-def crc32c(data: bytes) -> int:
-    """CRC32C (Castagnoli), reflected, init/xorout 0xFFFFFFFF — the
-    checksum TFRecord, iSCSI, and ext4 share."""
-    tbl = _crc_table()
-    c = 0xFFFFFFFF
-    for b in data:
-        c = (c >> 8) ^ tbl[(c ^ b) & 0xFF]
-    return c ^ 0xFFFFFFFF
+from .bitio import crc32c
 
 
 def masked_crc(data: bytes) -> int:

@@ -28,50 +28,11 @@ from __future__ import annotations
 import hashlib
 import struct
 
+from .bitio import crc32, crc64_xz
+
 
 class XzError(ValueError):
     pass
-
-
-# --- CRC32 (reflected, zlib poly) and CRC64 (xz's ECMA-182 reflected) -------
-
-def _mk_crc32():
-    tbl = []
-    for b in range(256):
-        c = b
-        for _ in range(8):
-            c = (c >> 1) ^ 0xEDB88320 if c & 1 else c >> 1
-        tbl.append(c)
-    return tbl
-
-
-def _mk_crc64():
-    poly = 0xC96C5795D7870F42          # 0x42F0E1EBA9EA3693 reflected
-    tbl = []
-    for b in range(256):
-        c = b
-        for _ in range(8):
-            c = (c >> 1) ^ poly if c & 1 else c >> 1
-        tbl.append(c)
-    return tbl
-
-
-_CRC32_TBL = _mk_crc32()
-_CRC64_TBL = _mk_crc64()
-
-
-def crc32_xz(data: bytes) -> int:
-    c = 0xFFFFFFFF
-    for b in data:
-        c = (c >> 8) ^ _CRC32_TBL[(c ^ b) & 0xFF]
-    return c ^ 0xFFFFFFFF
-
-
-def crc64_xz(data: bytes) -> int:
-    c = 0xFFFFFFFFFFFFFFFF
-    for b in data:
-        c = (c >> 8) ^ _CRC64_TBL[(c ^ b) & 0xFF]
-    return c ^ 0xFFFFFFFFFFFFFFFF
 
 
 # --- VLI (7 bits per byte, continuation high bit) ----------------------------
@@ -551,6 +512,14 @@ def decode_xz(blob: bytes) -> dict:
     """Decode a (possibly multi-stream) .xz blob with full structural
     verification. Returns ``{'content', 'n_streams', 'n_blocks',
     'checks'}`` where checks is the list of per-stream check names."""
+    try:
+        return _decode_xz(blob)
+    except (IndexError, struct.error) as e:
+        # truncation runs a header, index or footer read off the end
+        raise XzError("xz: truncated stream") from e
+
+
+def _decode_xz(blob: bytes) -> dict:
     out = bytearray()
     n_streams = 0
     n_blocks = 0
@@ -566,7 +535,7 @@ def decode_xz(blob: bytes) -> dict:
         if flags[0] != 0 or flags[1] not in _CHECK_SIZES:
             raise XzError("xz: unsupported stream flags")
         if struct.unpack("<I", blob[pos + 8:pos + 12])[0] != \
-                crc32_xz(flags):
+                crc32(flags):
             raise XzError("xz: stream-header CRC mismatch")
         check_id = flags[1]
         checks.append(_CHECK_NAMES[check_id])
@@ -579,7 +548,7 @@ def decode_xz(blob: bytes) -> dict:
                 break
             hdr_size = (first + 1) * 4
             hdr = blob[pos:pos + hdr_size]
-            if struct.unpack("<I", hdr[-4:])[0] != crc32_xz(hdr[:-4]):
+            if struct.unpack("<I", hdr[-4:])[0] != crc32(hdr[:-4]):
                 raise XzError("xz: block-header CRC mismatch")
             bflags = hdr[1]
             n_filters = (bflags & 3) + 1
@@ -624,7 +593,7 @@ def decode_xz(blob: bytes) -> dict:
             cbytes = blob[pos:pos + csz]
             pos += csz
             if check_id == 0x01:
-                if struct.unpack("<I", cbytes)[0] != crc32_xz(content):
+                if struct.unpack("<I", cbytes)[0] != crc32(content):
                     raise XzError("xz: block CRC32 mismatch")
             elif check_id == 0x04:
                 if struct.unpack("<Q", cbytes)[0] != crc64_xz(content):
@@ -654,7 +623,7 @@ def decode_xz(blob: bytes) -> dict:
                 raise XzError("xz: nonzero index padding")
             pos += 1
         if struct.unpack("<I", blob[pos:pos + 4])[0] != \
-                crc32_xz(blob[idx_start:pos]):
+                crc32(blob[idx_start:pos]):
             raise XzError("xz: index CRC mismatch")
         pos += 4
         index_size = pos - idx_start
@@ -666,7 +635,7 @@ def decode_xz(blob: bytes) -> dict:
             raise XzError("xz: footer flags mismatch")
         if blob[pos + 10:pos + 12] != b"YZ":
             raise XzError("xz: bad footer magic")
-        if f_crc != crc32_xz(blob[pos + 4:pos + 10]):
+        if f_crc != crc32(blob[pos + 4:pos + 10]):
             raise XzError("xz: footer CRC mismatch")
         pos += 12
         n_streams += 1

@@ -28,7 +28,8 @@ from __future__ import annotations
 
 import struct
 
-from .deflatecodec import DeflateError, crc32, deflate, inflate
+from .bitio import crc32
+from .deflatecodec import DeflateError, deflate, inflate
 
 _EOCD_SIG = 0x06054B50
 _EOCD64_SIG = 0x06064B50

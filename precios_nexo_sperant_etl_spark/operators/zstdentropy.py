@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from bisect import bisect_right
 
+from .bitio import LsbReader, LsbWriter
+
 # ---------------------------------------------------------------------------
 # Bit IO
 # ---------------------------------------------------------------------------
@@ -87,48 +89,6 @@ class RevBitReader:
         return self.pos < 0
 
 
-class FwdBitReader:
-    """Forward little-endian bitstream (NCount descriptions)."""
-
-    def __init__(self, data: bytes) -> None:
-        self._data = data
-        self.pos = 0
-
-    def read(self, nbits: int) -> int:
-        out = 0
-        for i in range(nbits):
-            p = self.pos + i
-            byte = self._data[p >> 3] if (p >> 3) < len(self._data) else 0
-            out |= ((byte >> (p & 7)) & 1) << i
-        self.pos += nbits
-        return out
-
-    def peek(self, nbits: int) -> int:
-        saved = self.pos
-        v = self.read(nbits)
-        self.pos = saved
-        return v
-
-    def bytes_consumed(self) -> int:
-        return (self.pos + 7) // 8
-
-
-class FwdBitWriter:
-    def __init__(self) -> None:
-        self._val = 0
-        self._bits = 0
-
-    def append(self, value: int, nbits: int) -> None:
-        if value < 0 or value >> nbits:
-            raise ValueError("zstd: NCount field out of range")
-        self._val |= value << self._bits
-        self._bits += nbits
-
-    def finish(self) -> bytes:
-        nbytes = max(1, (self._bits + 7) // 8)
-        return self._val.to_bytes(nbytes, "little")
-
-
 # ---------------------------------------------------------------------------
 # FSE: NCount description (forward stream)
 # ---------------------------------------------------------------------------
@@ -138,7 +98,7 @@ def fse_read_ncount(data: bytes, max_acc: int) -> tuple[list[int], int, int]:
     """Parse an FSE table description. Returns (normalized counts,
     accuracy_log, bytes consumed). Counts may include -1 ("less than
     one"); trailing absent symbols are simply not listed."""
-    r = FwdBitReader(data)
+    r = LsbReader(data)
     acc = r.read(4) + 5
     if acc > max_acc:
         raise ValueError("zstd: FSE accuracy log over limit")
@@ -175,7 +135,7 @@ def fse_read_ncount(data: bytes, max_acc: int) -> tuple[list[int], int, int]:
             threshold >>= 1
     if remaining != 1:
         raise ValueError("zstd: corrupt FSE table description")
-    return counts, acc, r.bytes_consumed()
+    return counts, acc, (r.pos + 7) >> 3
 
 
 def fse_write_ncount(counts: list[int], acc: int) -> bytes:
@@ -184,8 +144,8 @@ def fse_write_ncount(counts: list[int], acc: int) -> bytes:
     table_size = 1 << acc
     if sum(max(c, 1) if c != 0 else 0 for c in counts) != table_size:
         raise ValueError("zstd: normalized counts must fill the table")
-    w = FwdBitWriter()
-    w.append(acc - 5, 4)
+    w = LsbWriter()
+    w.write(acc - 5, 4)
     remaining = table_size + 1
     threshold = table_size
     nbits = acc + 1
@@ -196,9 +156,9 @@ def fse_write_ncount(counts: list[int], acc: int) -> bytes:
         mx = (2 * threshold - 1) - remaining
         v = c + 1
         if v < mx:
-            w.append(v, nbits - 1)
+            w.write(v, nbits - 1)
         else:
-            w.append(v + mx if v >= threshold else v, nbits)
+            w.write(v + mx if v >= threshold else v, nbits)
         remaining -= -c if c < 0 else c
         while remaining < threshold:
             nbits -= 1
@@ -211,7 +171,7 @@ def fse_write_ncount(counts: list[int], acc: int) -> bytes:
             # never emit implicit-trailing zeros the reader won't ask for
             i += run
             while True:
-                w.append(min(run, 3), 2)
+                w.write(min(run, 3), 2)
                 if run < 3:
                     break
                 run -= 3

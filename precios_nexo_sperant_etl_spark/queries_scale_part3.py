@@ -2323,6 +2323,7 @@ FROM documents ORDER BY doc_id
 def _mp3_sideinfo_audit(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
 
+    from .operators.bitio import MsbWriter
     from .operators.multimodal import (_MP3_BITRATES, _MP3_RATES,
                                        parse_mp3_sideinfo)
 
@@ -2345,21 +2346,17 @@ def _mp3_sideinfo_audit(spark: SparkSession, sf: str) -> DataFrame:
                 for k in range(nf):
                     hdr = bytes([0xFF, 0xFB,
                                  (bidx << 4) | (ridx << 2), 0xC0])
-                    bits: list[tuple[int, int]] = []  # (value, width)
+                    w = MsbWriter()
                     mdb = min(511, k * main_len, 37 * k + did % 101)
-                    bits.append((mdb, 9))
-                    bits.append((0, 5))          # private
-                    bits.append((0, 4))          # scfsi (mono)
+                    w.write(mdb, 9)
+                    w.write(0, 5)                # private
+                    w.write(0, 4)                # scfsi (mono)
                     for g in range(2):
-                        bits.append(((did * 7 + k * 13 + g * 5) % 396,
-                                     12))        # part2_3_length
-                        bits.append(((did * 3 + k + g) % 289, 9))
-                        bits.append((0, 38))     # rest of gr block
-                    acc, nb = 0, 0
-                    for v, w in bits:
-                        acc = (acc << w) | v
-                        nb += w
-                    side = acc.to_bytes(nb // 8, "big")
+                        w.write((did * 7 + k * 13 + g * 5) % 396,
+                                12)              # part2_3_length
+                        w.write((did * 3 + k + g) % 289, 9)
+                        w.write(0, 38)           # rest of gr block
+                    side = w.finish()
                     chunks.append(hdr + side
                                   + b"\x00" * (flen - 4 - len(side)))
                 payloads.append(b"".join(chunks))

@@ -8,6 +8,7 @@ the flip lands outside checked structure.)"""
 from __future__ import annotations
 
 import gzip
+import lzma
 import random
 import signal
 import zlib
@@ -16,10 +17,13 @@ import numpy as np
 import pytest
 
 from precios_nexo_sperant_etl_spark.operators import avro_ocf as av
+from precios_nexo_sperant_etl_spark.operators import bzip2 as bz
 from precios_nexo_sperant_etl_spark.operators import flaccodec as fl
 from precios_nexo_sperant_etl_spark.operators import jpegcodec as jc
+from precios_nexo_sperant_etl_spark.operators import lz4codec as lz
 from precios_nexo_sperant_etl_spark.operators import multimodal as mm
 from precios_nexo_sperant_etl_spark.operators import tfrecord as tfr
+from precios_nexo_sperant_etl_spark.operators import xzlzma as xz
 from precios_nexo_sperant_etl_spark.operators import zstdframe as zs
 
 _Y, _X = np.mgrid[0:16, 0:16]
@@ -61,6 +65,13 @@ FIXTURES = {
                av.snappy_decompress),
     "lzw": (mm._tiff_lzw_encode(bytes(range(100))), mm._tiff_lzw_decode),
     "gzip": (gzip.compress(b"data" * 50), mm.decode_gzip),
+    "bzip2": (bz.encode_bzip2(b"bzip2 block " * 20 + bytes(range(40))),
+              bz.decode_bzip2),
+    "xz": (lzma.compress(b"xz stream body " * 20, check=lzma.CHECK_CRC64),
+           xz.decode_xz),
+    "lz4": (lz.lz4_frame_compress(b"lz4 frame body " * 20,
+                                  block_checksum=True),
+            lz.lz4_frame_decompress),
     "flac": (fl.encode_flac([(i * i * 5 + 29 * i) % 3001 - 1500
                              for i in range(64)], "fixed",
                             order=2, rice=9), fl.decode_flac),

@@ -8,8 +8,9 @@ from __future__ import annotations
 
 import pytest
 
+from precios_nexo_sperant_etl_spark.operators.bitio import crc8, crc16
 from precios_nexo_sperant_etl_spark.operators.flaccodec import (
-    UnsupportedFlac, _crc8, _crc16, decode_flac, encode_flac)
+    UnsupportedFlac, decode_flac, encode_flac)
 from precios_nexo_sperant_etl_spark.operators.zstdframe import (
     UnsupportedZstd, decode_zstd_frame, encode_zstd_raw)
 
@@ -95,8 +96,8 @@ class TestFlac:
 
     def test_crc_vectors(self):
         # CRC-8 poly 0x07 and CRC-16 poly 0x8005 known vectors
-        assert _crc8(b"123456789") == 0xF4
-        assert _crc16(b"123456789") == 0xFEE8
+        assert crc8(b"123456789") == 0xF4
+        assert crc16(b"123456789") == 0xFEE8
 
 
 class TestZstd:

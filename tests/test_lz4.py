@@ -11,7 +11,8 @@ import pytest
 
 from precios_nexo_sperant_etl_spark.operators.lz4codec import (
     Lz4Error, lz4_block_compress, lz4_block_decompress,
-    lz4_frame_compress, lz4_frame_decompress, xxh32, xxh64)
+    lz4_frame_compress, lz4_frame_decompress, xxh32)
+from precios_nexo_sperant_etl_spark.operators.zstdentropy import xxh64
 
 
 def _texty(rng, n):

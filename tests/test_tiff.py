@@ -3,6 +3,9 @@ the early-change width boundary, and corruption postures."""
 
 from __future__ import annotations
 
+import random
+import time
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -31,6 +34,16 @@ def test_lzw_table_reset():
 def test_lzw_kwkwk():
     data = b"aaaaaaaaaaaaaaaa"
     assert _tiff_lzw_decode(_tiff_lzw_encode(data)) == data
+
+
+def test_lzw_linear_time():
+    # the bit packers must keep only the pending bits: an accumulator
+    # holding the whole stream makes every code write/read O(n), so the
+    # roundtrip turns quadratic in the input size
+    data = random.Random(3).randbytes(256 * 1024)
+    t0 = time.perf_counter()
+    assert _tiff_lzw_decode(_tiff_lzw_encode(data)) == data
+    assert time.perf_counter() - t0 < 10.0
 
 
 @settings(max_examples=25, deadline=None)

@@ -139,14 +139,16 @@ def test_h264_slice_before_pps_raises():
 
 
 def test_h264_se_golomb_roundtrip():
+    from precios_nexo_sperant_etl_spark.operators.bitio import (
+        MsbReader, MsbWriter)
     from precios_nexo_sperant_etl_spark.operators.multimodal import (
-        _BitReaderMSB, _BitWriterMSB)
+        _put_se, _rbsp_trailing, _se)
     vals = [0, 1, -1, 2, -2, 7, -7, 120, -120]
-    w = _BitWriterMSB()
+    w = MsbWriter()
     for v in vals:
-        w.se(v)
-    r = _BitReaderMSB(w.trailing())
-    assert [r.se() for _ in vals] == vals
+        _put_se(w, v)
+    r = MsbReader(_rbsp_trailing(w))
+    assert [_se(r) for _ in vals] == vals
 
 
 def test_av1_obu_roundtrip_all_profiles():

@@ -11,6 +11,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from precios_nexo_sperant_etl_spark.operators import zstdentropy as ze
+from precios_nexo_sperant_etl_spark.operators.bitio import LsbReader, LsbWriter
 from precios_nexo_sperant_etl_spark.operators.zstdframe import (
     UnsupportedZstd, decode_zstd_frame, encode_zstd_compressed,
     encode_zstd_raw)
@@ -55,10 +56,10 @@ def test_rev_bitstream_roundtrip(fields):
                 min_size=1, max_size=40))
 def test_fwd_bitstream_roundtrip(fields):
     fields = [(v & ((1 << n) - 1), n) for v, n in fields]
-    w = ze.FwdBitWriter()
+    w = LsbWriter()
     for v, n in fields:
-        w.append(v, n)
-    r = ze.FwdBitReader(w.finish())
+        w.write(v, n)
+    r = LsbReader(w.finish())
     for v, n in fields:
         assert r.read(n) == v
 
