@@ -40,7 +40,9 @@ transform pair bit-exactly (the DC basis is constant: FDCT puts the
 whole block into DC = 8*(v-128) with zero ACs, and the IDCT of a
 DC-only block is uniform DC/8), which is what makes a hash-strict
 DuckDB oracle over decoded pixels possible — see
-``jpeg_decode_roundtrip`` in ``queries_scale.py``.
+``jpeg_decode_roundtrip`` in ``queries_scale_part2.py``, which builds
+its images with :func:`flat_quad_gray` and reads them back with
+:func:`gray_decode_stats` (so does ``jpeg_progressive_roundtrip``).
 """
 
 from __future__ import annotations
@@ -55,6 +57,8 @@ __all__ = [
     "encode_baseline_ycbcr",
     "encode_progressive_gray",
     "decode_baseline",
+    "flat_quad_gray",
+    "gray_decode_stats",
 ]
 
 
@@ -1163,3 +1167,27 @@ def encode_progressive_gray(px: np.ndarray,
     sof = seg(0xC2, struct.pack(">BHHB", 8, h, w, 1) + b"\x01\x11\x00")
     return (b"\xff\xd8" + dqt + dht + sof
             + scan1 + scan2 + ac_scans + b"\xff\xd9")
+
+
+# --- roundtrip-query helpers -------------------------------------------------
+
+def flat_quad_gray(base: int) -> np.ndarray:
+    """16x16 gray image of four flat 8x8 blocks; block k (row-major)
+    holds ``(base + 97 * k) % 256``. Flat blocks survive the DCT pair
+    bit-exactly, so the decoded pixel stats follow from ``base`` alone
+    and a DuckDB oracle can recompute them arithmetically."""
+    px = np.zeros((16, 16), dtype=np.uint8)
+    for k in range(4):
+        by, bx = divmod(k, 2)
+        px[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = (base + 97 * k) % 256
+    return px
+
+
+def gray_decode_stats(row: dict) -> dict:
+    """Row function for the gray JPEG roundtrips: decode ``payload``
+    and report its size and pixel sum/min/max under ``doc_id``."""
+    r = decode_baseline(row["payload"])
+    px = r["pixels"].astype("int64")
+    return {"doc_id": row["doc_id"], "out_w": r["width"],
+            "out_h": r["height"], "pix_sum": int(px.sum()),
+            "pix_min": int(px.min()), "pix_max": int(px.max())}

@@ -29,9 +29,7 @@ __all__ = [
     "_duck_char_hash",
     "_duck_dot",
     "_duck_md5_hash",
-    "_fanout",
     "_sorted1",
-    "_spread",
     "_t",
     "attach_binary",
     "cosine_topk",
@@ -126,22 +124,6 @@ hs AS (SELECT DISTINCT doc_id, {_duck_md5_hash('s')} AS h FROM shs)
 """
 
 
-def _fanout(df, spark):
-    """Scale-adaptive pre-spread for expensive narrow stages (heavy
-    regex/explode/decimal projections that run BEFORE the first
-    exchange). At bench scale every base table is ONE parquet file, so
-    the whole pre-exchange stage executes in a single task (guide §2.5
-    "input skew: one huge unsplittable file — repartition immediately
-    after the read"); on a real deployment the scan already has ≥
-    cores splits and this is a NO-OP — the condition keeps the extra
-    round-robin exchange out of fleet-scale plans instead of hard-
-    coding a local[32] shape.
-    """
-    if df.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism:
-        return df
-    return df.repartition(spark.sparkContext.defaultParallelism)
-
-
 def _sorted1(df, *cols):
     """Total-order an audit-sized result without ``orderBy``'s
     range-exchange SAMPLING pass. ``orderBy`` plans an
@@ -162,20 +144,3 @@ def _sorted1(df, *cols):
     from .operators.sortutil import final_sort
     return final_sort(df, *cols)
 
-
-def _spread(df, key, n_groups):
-    """Pre-partition by the group key ahead of ``groupBy(key)
-    .applyInPandas``. AQE's byte-targeted coalescing folds tiny
-    per-group shuffle partitions into ONE and serializes grouped
-    Python stages (cost per GROUP, not per byte: 16 sleep(2) groups
-    measured 38.8s coalesced vs 5.5s not). A user-specified
-    ``repartition(n, key)`` is exempt from coalescing and the
-    downstream grouping REUSES the partitioning (no second Exchange),
-    so the Python work parallelizes while every other stage in the
-    query keeps coalescing's small-task savings — the per-site fix the
-    session keeps coalescing ON for (see ``session.configure``).
-    Width is exactly ``n_groups``: hash collisions leave ~2 groups in
-    a few tasks, but measured A/B (avro shards at width 1×/2×/4× =
-    0.95/1.24/1.74 s) shows task overhead beats the tail-parallelism
-    gain at larger widths."""
-    return df.repartition(int(n_groups), key)

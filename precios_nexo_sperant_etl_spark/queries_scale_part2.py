@@ -5,6 +5,8 @@ queries_scale_common.py for why the split is positional. Import order
 (queries_scale.py) IS the registration order; do not reorder.
 """
 
+from .operators.seam import map_rows
+from .operators.spread import fanout
 from .queries_scale_common import *  # noqa: F401,F403
 from .queries_scale_part1 import (  # noqa: F401 — earlier-part helpers
     _ANN_QUERY_IDS, _BANDS_SQL, _BPE_MERGES,
@@ -448,10 +450,10 @@ def _filter_funnel(spark: SparkSession, sf: str) -> DataFrame:
     # old shape joined gopher_quality_flags back on doc_id, scanning and
     # tokenizing the corpus TWICE plus a join exchange for flags that
     # are pure Column expressions over the same text.
-    # _fanout: all three signals are regex-dense and the bench-scale
+    # fanout: all three signals are regex-dense and the bench-scale
     # scan is one parquet file (single task); no-op on real multi-split
     # inputs.
-    base = _fanout(docs.select("doc_id", "text"), spark).select(
+    base = fanout(docs.select("doc_id", "text")).select(
         "doc_id",
         lang_pred_expr(F.col("text")).alias("lp"),
         F.md5(canonical_text(F.col("text"))).alias("h"),
@@ -1154,9 +1156,9 @@ ORDER BY type_a, type_b
 # ---------------------------------------------------------------------------
 
 def _discount_price_corr(spark: SparkSession, sf: str) -> DataFrame:
-    # _fanout: six decimal-product partial sums over 600k rows would
+    # fanout: six decimal-product partial sums over 600k rows would
     # otherwise run in the single-task local scan stage
-    li = _fanout(_t(spark, sf, "lineitem"), spark)
+    li = fanout(_t(spark, sf, "lineitem"))
     x = (F.col("l_discount").cast("decimal(18,2)") * 100).cast("long")
     y = F.col("l_extendedprice").cast("decimal(18,2)")
     agg = (li.groupBy("l_returnflag").agg(
@@ -1211,9 +1213,9 @@ FROM s ORDER BY l_returnflag
 
 
 def _winsorized_mean(spark: SparkSession, sf: str) -> DataFrame:
-    # _fanout: the exact-percentile partial buffers over the whole
+    # fanout: the exact-percentile partial buffers over the whole
     # orders table would otherwise build in the single-task scan stage
-    o = _fanout(_t(spark, sf, "orders"), spark)
+    o = fanout(_t(spark, sf, "orders"))
     pct = (o.groupBy("o_orderstatus").agg(
         F.expr("percentile(o_totalprice, 0.05)").alias("p5"),
         F.expr("percentile(o_totalprice, 0.95)").alias("p95")))
@@ -1280,8 +1282,8 @@ FROM c GROUP BY o_orderstatus ORDER BY o_orderstatus
 def _pareto_frontier(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
     from .operators.text import BPE_ISH_PATTERN, quality_expr
-    d = (_fanout(_t(spark, sf, "documents"), spark)
-         # _fanout: the regexp_count + quality_expr projection is the
+    d = (fanout(_t(spark, sf, "documents"))
+         # fanout: the regexp_count + quality_expr projection is the
          # expensive stage and otherwise runs in the single-task local
          # scan (no-op on real multi-split inputs)
          .select(
@@ -1708,7 +1710,7 @@ def _item_item_cf(spark: SparkSession, sf: str) -> DataFrame:
     # the distinct; the sorted set expanded bucket-locally (posexplode +
     # slice, codegen generators — no interpreted lambda) yields each
     # a < b pair exactly once, so pair counts and per-item counts are
-    # unchanged. No _fanout here: the keyless repartition's mandatory
+    # unchanged. No fanout here: the keyless repartition's mandatory
     # pre-sort (SPARK-23207) of the full lineitem projection measured
     # +0.6 s, more than the single-task partial agg it parallelizes.
     baskets = (_t(spark, sf, "lineitem")
@@ -2473,7 +2475,6 @@ FROM m ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _png_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
     from .operators.multimodal import encode_png, extract_media_features
 
     d = _t(spark, sf, "documents")
@@ -2490,14 +2491,11 @@ def _png_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     src = (d.select("doc_id", rgb.alias("rgb"))
             .repartition(spark.sparkContext.defaultParallelism))
 
-    def enc(it):
-        for pdf in it:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "payload": [encode_png(bytes(b), 4) for b in pdf["rgb"]],
-            })
+    def enc(row):
+        return {"doc_id": row["doc_id"],
+                "payload": encode_png(row["rgb"], 4)}
 
-    binary_df = src.mapInPandas(enc, "doc_id long, payload binary")
+    binary_df = map_rows(src, enc, "doc_id long, payload binary")
     return (extract_media_features(binary_df)
             .select("doc_id", "mime_detected", "width", "height",
                     "mean_r_milli", "mean_g_milli", "mean_b_milli")
@@ -2562,7 +2560,6 @@ FROM m ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _bmp_resize_features(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
     from .operators.multimodal import bmp_pixels, downsample_box2
 
     def le32(c):
@@ -2586,22 +2583,15 @@ def _bmp_resize_features(spark: SparkSession, sf: str) -> DataFrame:
     src = (d.select("doc_id", F.concat(header, data).alias("payload"))
             .repartition(spark.sparkContext.defaultParallelism))
 
-    def feats(it):
-        for pdf in it:
-            rows = []
-            for p in pdf["payload"]:
-                small = downsample_box2(bmp_pixels(bytes(p)))
-                s = small.sum(axis=(0, 1)) if small.size else [0, 0, 0]
-                rows.append({"out_w": small.shape[1],
-                             "out_h": small.shape[0],
-                             "sum_b": int(s[0]), "sum_g": int(s[1]),
-                             "sum_r": int(s[2])})
-            out = pd.DataFrame(rows)
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64").values)
-            yield out
+    def feats(row):
+        small = downsample_box2(bmp_pixels(row["payload"]))
+        s = small.sum(axis=(0, 1)) if small.size else [0, 0, 0]
+        return {"doc_id": row["doc_id"], "out_w": small.shape[1],
+                "out_h": small.shape[0], "sum_b": int(s[0]),
+                "sum_g": int(s[1]), "sum_r": int(s[2])}
 
-    return (src.mapInPandas(feats, "doc_id long, out_w long, out_h long,"
-                                   " sum_b long, sum_g long, sum_r long")
+    return (map_rows(src, feats, "doc_id long, out_w long, out_h long,"
+                                 " sum_b long, sum_g long, sum_r long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -2669,32 +2659,23 @@ def _gzip_text_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import gzip
     import hashlib
 
-    import pandas as pd
     from .operators.multimodal import decode_gzip
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "payload": [gzip.compress(t.encode("utf-8"))
-                            for t in pdf["text"]],
-            })
+    def enc(row):
+        return {"doc_id": row["doc_id"],
+                "payload": gzip.compress(row["text"].encode("utf-8"))}
 
-    def dec(it):
-        for pdf in it:
-            raw = [decode_gzip(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "uncompressed_len": [len(b) for b in raw],
-                "text_md5": [hashlib.md5(b).hexdigest() for b in raw],
-            })
+    def dec(row):
+        raw = decode_gzip(row["payload"])
+        return {"doc_id": row["doc_id"], "uncompressed_len": len(raw),
+                "text_md5": hashlib.md5(raw).hexdigest()}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, uncompressed_len long,"
-                                 " text_md5 string")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, uncompressed_len long,"
+                                  " text_md5 string")
                .transform(_sorted1, "doc_id"))
 
 
@@ -3275,47 +3256,22 @@ ORDER BY name_a, name_b
 # ---------------------------------------------------------------------------
 
 def _jpeg_decode_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    from .operators.jpegcodec import decode_baseline, encode_baseline_gray
+    from .operators.jpegcodec import (encode_baseline_gray, flat_quad_gray,
+                                      gray_decode_stats)
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                px = np.zeros((16, 16), dtype=np.uint8)
-                for k in range(4):
-                    v = (did * 31 + 97 * k) % 256
-                    by, bx = divmod(k, 2)
-                    px[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = v
-                payloads.append(encode_baseline_gray(
-                    px, restart_interval=2 if did % 2 == 0 else 0))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        did = row["doc_id"]
+        return {"doc_id": did, "payload": encode_baseline_gray(
+            flat_quad_gray(did * 31),
+            restart_interval=2 if did % 2 == 0 else 0)}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = decode_baseline(bytes(p))
-                px = r["pixels"].astype("int64")
-                rows.append({"doc_id": int(did),
-                             "out_w": r["width"], "out_h": r["height"],
-                             "pix_sum": int(px.sum()),
-                             "pix_min": int(px.min()),
-                             "pix_max": int(px.max())})
-            yield pd.DataFrame(rows)
-
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, out_w long, out_h long,"
-                                 " pix_sum long, pix_min long,"
-                                 " pix_max long")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, gray_decode_stats,
+                     "doc_id long, out_w long, out_h long,"
+                     " pix_sum long, pix_min long, pix_max long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -3365,8 +3321,6 @@ FROM v ORDER BY doc_id
 def _mp4_box_probe(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.multimodal import probe_mp4
 
-    import pandas as pd
-
     def be32(c):
         def pair(x):
             return F.lpad(F.hex(x % 256), 2, "0")
@@ -3400,24 +3354,13 @@ def _mp4_box_probe(spark: SparkSession, sf: str) -> DataFrame:
     src = (d.select("doc_id", payload.alias("payload"))
             .repartition(spark.sparkContext.defaultParallelism))
 
-    def probe(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = probe_mp4(bytes(p))
-                rows.append({"doc_id": int(did), "brand": r["brand"],
-                             "timescale": r["timescale"],
-                             "duration_ms": r["duration_ms"],
-                             "n_tracks": r["n_tracks"],
-                             "width": r["width"], "height": r["height"],
-                             "byte_len": r["byte_len"]})
-            yield pd.DataFrame(rows)
+    def probe(row):
+        return {**probe_mp4(row["payload"]), "doc_id": row["doc_id"]}
 
-    return (src.mapInPandas(probe, "doc_id long, brand string,"
-                                   " timescale long, duration_ms long,"
-                                   " n_tracks long, width long,"
-                                   " height long, byte_len long")
+    return (map_rows(src, probe, "doc_id long, brand string,"
+                                 " timescale long, duration_ms long,"
+                                 " n_tracks long, width long,"
+                                 " height long, byte_len long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -3461,8 +3404,6 @@ FROM b ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _wav_frame_energy(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.multimodal import pcm_frame_features, wav_samples
 
     def le32(c):
@@ -3486,22 +3427,15 @@ def _wav_frame_energy(spark: SparkSession, sf: str) -> DataFrame:
     src = (d.select("doc_id", payload.alias("payload"))
             .repartition(spark.sparkContext.defaultParallelism))
 
-    def feats(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                x = wav_samples(bytes(p))[:, 0]
-                r = pcm_frame_features(x, frame=64,
-                                       voiced_threshold=1_000_000)
-                r["doc_id"] = int(did)
-                rows.append(r)
-            yield pd.DataFrame(rows)
+    def feats(row):
+        x = wav_samples(row["payload"])[:, 0]
+        r = pcm_frame_features(x, frame=64, voiced_threshold=1_000_000)
+        return {**r, "doc_id": row["doc_id"]}
 
-    return (src.mapInPandas(feats, "n_samples long, n_frames long,"
-                                   " zero_crossings long,"
-                                   " max_energy long, peak_frame long,"
-                                   " voiced_frames long, doc_id long")
+    return (map_rows(src, feats, "n_samples long, n_frames long,"
+                                 " zero_crossings long,"
+                                 " max_energy long, peak_frame long,"
+                                 " voiced_frames long, doc_id long")
                .select("doc_id", "n_samples", "n_frames", "max_energy",
                        "peak_frame", "voiced_frames", "zero_crossings")
                .transform(_sorted1, "doc_id"))

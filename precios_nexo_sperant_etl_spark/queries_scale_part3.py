@@ -5,6 +5,8 @@ queries_scale_common.py for why the split is positional. Import order
 (queries_scale.py) IS the registration order; do not reorder.
 """
 
+from .operators.seam import map_rows
+from .operators.spread import group_spread
 from .queries_scale_common import *  # noqa: F401,F403
 from .queries_scale_part1 import (  # noqa: F401 — earlier-part helpers
     _ANN_QUERY_IDS, _SIG_SQL, _bands_sql,
@@ -60,7 +62,7 @@ def _webdataset_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
             "payload": [build_shard(parts)],
         })
 
-    shards = (_spread(d, "shard_id", 32).groupBy("shard_id")
+    shards = (group_spread(d, "shard_id", 32).groupBy("shard_id")
                .applyInPandas(write_shard, "shard_id long, payload binary"))
 
     def read_shard(it):
@@ -118,8 +120,6 @@ FROM documents ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _exif_orientation_probe(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.multimodal import probe_tiff_exif
 
     def le32(c):
@@ -155,21 +155,13 @@ def _exif_orientation_probe(spark: SparkSession, sf: str) -> DataFrame:
                     payload.alias("payload"))
             .repartition(spark.sparkContext.defaultParallelism))
 
-    def probe(it):
-        for pdf in it:
-            rows = []
-            for did, car, p in zip(pdf["doc_id"].astype("int64"),
-                                   pdf["carriage"], pdf["payload"]):
-                r = probe_tiff_exif(bytes(p))
-                rows.append({"doc_id": int(did), "carriage": car,
-                             "byte_order": r["byte_order"],
-                             "width": r["width"], "height": r["height"],
-                             "orientation": r["orientation"]})
-            yield pd.DataFrame(rows)
+    def probe(row):
+        return {**probe_tiff_exif(row["payload"]),
+                "doc_id": row["doc_id"], "carriage": row["carriage"]}
 
-    return (src.mapInPandas(probe, "doc_id long, carriage string,"
-                                   " byte_order string, width long,"
-                                   " height long, orientation long")
+    return (map_rows(src, probe, "doc_id long, carriage string,"
+                                 " byte_order string, width long,"
+                                 " height long, orientation long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -211,54 +203,35 @@ FROM b ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _mp3_frame_probe(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.multimodal import (_MP3_BITRATES, _MP3_RATES,
                                        parse_mp3_frames)
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def synth(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                bidx = 1 + did % 14
-                ridx = did % 3
-                nf = 1 + did % 4
-                chunks = [b"ID3\x04\x00\x00" + bytes([0, 0, 0, 11])
-                          + b"tag-payload"]
-                for k in range(nf):
-                    pad = (did + k) % 2
-                    hdr = bytes([0xFF, 0xFB,
-                                 (bidx << 4) | (ridx << 2) | (pad << 1),
-                                 0x00])
-                    flen = (144 * _MP3_BITRATES[bidx] * 1000
-                            // _MP3_RATES[ridx] + pad)
-                    chunks.append(hdr + b"\x00" * (flen - 4))
-                payloads.append(b"".join(chunks))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def synth(row):
+        did = row["doc_id"]
+        bidx = 1 + did % 14
+        ridx = did % 3
+        nf = 1 + did % 4
+        chunks = [b"ID3\x04\x00\x00" + bytes([0, 0, 0, 11])
+                  + b"tag-payload"]
+        for k in range(nf):
+            pad = (did + k) % 2
+            hdr = bytes([0xFF, 0xFB,
+                         (bidx << 4) | (ridx << 2) | (pad << 1), 0x00])
+            flen = (144 * _MP3_BITRATES[bidx] * 1000
+                    // _MP3_RATES[ridx] + pad)
+            chunks.append(hdr + b"\x00" * (flen - 4))
+        return {"doc_id": did, "payload": b"".join(chunks)}
 
-    def probe(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = parse_mp3_frames(bytes(p))
-                rows.append({"doc_id": int(did),
-                             "n_frames": r["n_frames"],
-                             "bitrate_kbps": r["bitrate_kbps"],
-                             "sample_rate": r["sample_rate"],
-                             "duration_ms": r["duration_ms"],
-                             "byte_len": r["byte_len"]})
-            yield pd.DataFrame(rows)
+    def probe(row):
+        return {**parse_mp3_frames(row["payload"]), "doc_id": row["doc_id"]}
 
-    return (src.mapInPandas(synth, "doc_id long, payload binary")
-               .mapInPandas(probe, "n_frames long, bitrate_kbps long,"
-                                   " sample_rate long, duration_ms long,"
-                                   " byte_len long, doc_id long")
+    synth_df = map_rows(src, synth, "doc_id long, payload binary")
+    return (map_rows(synth_df, probe, "n_frames long, bitrate_kbps long,"
+                                      " sample_rate long, duration_ms long,"
+                                      " byte_len long, doc_id long")
                .select("doc_id", "n_frames", "bitrate_kbps",
                        "sample_rate", "duration_ms", "byte_len")
                .transform(_sorted1, "doc_id"))
@@ -444,8 +417,6 @@ def _unicode_nfc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
     import unicodedata
 
-    import pandas as pd
-
     d = _t(spark, sf, "documents")
     dec = " e\u0301A\u030a"   # e+COMBINING ACUTE, A+COMBINING RING
     comp = " \u00e9\u00c5"     # the precomposed forms
@@ -455,22 +426,16 @@ def _unicode_nfc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     src = (d.select("doc_id", t2.alias("t"))
             .repartition(spark.sparkContext.defaultParallelism))
 
-    def norm(it):
-        for pdf in it:
-            rows = []
-            for did, s in zip(pdf["doc_id"].astype("int64"), pdf["t"]):
-                n = unicodedata.normalize("NFC", s)
-                rows.append({"doc_id": int(did),
-                             "orig_chars": len(s),
-                             "nfc_chars": len(n),
-                             "changed": n != s,
-                             "nfc_md5": hashlib.md5(
-                                 n.encode("utf-8")).hexdigest()})
-            yield pd.DataFrame(rows)
+    def norm(row):
+        s = row["t"]
+        n = unicodedata.normalize("NFC", s)
+        return {"doc_id": row["doc_id"], "orig_chars": len(s),
+                "nfc_chars": len(n), "changed": n != s,
+                "nfc_md5": hashlib.md5(n.encode("utf-8")).hexdigest()}
 
-    return (src.mapInPandas(norm, "doc_id long, orig_chars long,"
-                                  " nfc_chars long, changed boolean,"
-                                  " nfc_md5 string")
+    return (map_rows(src, norm, "doc_id long, orig_chars long,"
+                                " nfc_chars long, changed boolean,"
+                                " nfc_md5 string")
                .orderBy("doc_id"))
 
 
@@ -1055,42 +1020,32 @@ def _warc_record_extract(spark: SparkSession, sf: str) -> DataFrame:
     import gzip as _gzip
     import hashlib
 
-    import pandas as pd
-
     from .operators.webdataset import build_warc, parse_warc_records
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def roundtrip(it):
-        for pdf in it:
-            rows = []
-            for did, text in zip(pdf["doc_id"].astype("int64"),
-                                 pdf["text"]):
-                did = int(did)
-                body = str(text).encode("utf-8")
-                w = build_warc([
-                    ("warcinfo", f"<urn:uuid:{did}-info>",
-                     b"software: engine-test"),
-                    ("response", f"<urn:uuid:{did}-resp>", body)])
-                if did % 2 == 0:
-                    w = _gzip.compress(w)
-                recs = parse_warc_records(w)
-                resp = [r for r in recs if r["type"] == "response"][0]
-                rows.append({
-                    "doc_id": did,
-                    "carriage": "gzip" if did % 2 == 0 else "plain",
-                    "n_records": len(recs),
-                    "response_len": resp["content_length"],
-                    "response_md5": hashlib.md5(
-                        resp["payload"]).hexdigest(),
-                })
-            yield pd.DataFrame(rows)
+    def roundtrip(row):
+        did = row["doc_id"]
+        body = str(row["text"]).encode("utf-8")
+        w = build_warc([
+            ("warcinfo", f"<urn:uuid:{did}-info>",
+             b"software: engine-test"),
+            ("response", f"<urn:uuid:{did}-resp>", body)])
+        if did % 2 == 0:
+            w = _gzip.compress(w)
+        recs = parse_warc_records(w)
+        resp = [r for r in recs if r["type"] == "response"][0]
+        return {"doc_id": did,
+                "carriage": "gzip" if did % 2 == 0 else "plain",
+                "n_records": len(recs),
+                "response_len": resp["content_length"],
+                "response_md5": hashlib.md5(resp["payload"]).hexdigest()}
 
-    return (src.mapInPandas(roundtrip,
-                            "doc_id long, carriage string,"
-                            " n_records long, response_len long,"
-                            " response_md5 string")
+    return (map_rows(src, roundtrip,
+                     "doc_id long, carriage string,"
+                     " n_records long, response_len long,"
+                     " response_md5 string")
                .orderBy("doc_id"))
 
 
@@ -1135,38 +1090,31 @@ _WEB_MIN_TOKENS = 30
 def _web_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     import gzip as _gzip
 
-    import pandas as pd
-
     from .operators.text import html_to_text, tokens
     from .operators.webdataset import build_warc, parse_warc_records
 
     d = _t(spark, sf, "documents").select("doc_id", "source", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def wrap_unwrap(it):
+    def wrap_unwrap(row):
         # WARC-wrap the HTML page, then immediately unwrap through the
         # REAL parser — the ingest seam exercised inside the pipeline.
-        for pdf in it:
-            rows = []
-            for did, source, text in zip(pdf["doc_id"].astype("int64"),
-                                         pdf["source"], pdf["text"]):
-                did = int(did)
-                page = (f"<html><head><title>Doc {did}</title>"
-                        f'<script>var x="<b>boiler</b>";</script></head>'
-                        f"<body><nav>Home | About</nav><p>{text}</p>"
-                        f"<!-- c --><footer>(c) 2024</footer>"
-                        f"</body></html>").encode("utf-8")
-                w = build_warc([("response", f"<urn:uuid:{did}>", page)])
-                if did % 2 == 0:
-                    w = _gzip.compress(w)
-                resp = [r for r in parse_warc_records(w)
-                        if r["type"] == "response"][0]
-                rows.append({"doc_id": did, "source": source,
-                             "html": resp["payload"].decode("utf-8")})
-            yield pd.DataFrame(rows)
+        did = row["doc_id"]
+        page = (f"<html><head><title>Doc {did}</title>"
+                f'<script>var x="<b>boiler</b>";</script></head>'
+                f"<body><nav>Home | About</nav><p>{row['text']}</p>"
+                f"<!-- c --><footer>(c) 2024</footer>"
+                f"</body></html>").encode("utf-8")
+        w = build_warc([("response", f"<urn:uuid:{did}>", page)])
+        if did % 2 == 0:
+            w = _gzip.compress(w)
+        resp = [r for r in parse_warc_records(w)
+                if r["type"] == "response"][0]
+        return {"doc_id": did, "source": row["source"],
+                "html": resp["payload"].decode("utf-8")}
 
-    pages = src.mapInPandas(wrap_unwrap,
-                            "doc_id long, source string, html string")
+    pages = map_rows(src, wrap_unwrap,
+                     "doc_id long, source string, html string")
     extracted = pages.select(
         "doc_id", "source", html_to_text(F.col("html")).alias("body"))
     gated = extracted.where(
@@ -1550,49 +1498,38 @@ FROM ch GROUP BY source ORDER BY source
 def _charset_sniff(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
 
-    import pandas as pd
-
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def sniff(it):
-        for pdf in it:
-            rows = []
-            for did, text in zip(pdf["doc_id"].astype("int64"),
-                                 pdf["text"]):
-                did = int(did)
-                s = str(text)
-                if did % 3 == 0:
-                    payload = (s + " café—fin").encode("utf-8")
-                elif did % 3 == 1:
-                    payload = s.encode("latin-1") + bytes([0xE9, 0x20,
-                                                           0xFC])
-                else:
-                    payload = "\ufeff".encode("utf-16-le") \
-                        + s.encode("utf-16-le")
-                # --- the real detector ---
-                if payload[:2] in (b"\xff\xfe", b"\xfe\xff"):
-                    enc = ("utf-16-le" if payload[:2] == b"\xff\xfe"
-                           else "utf-16-be")
-                    decoded = payload[2:].decode(enc)
-                    detected = enc
-                else:
-                    try:
-                        decoded = payload.decode("utf-8", "strict")
-                        detected = "utf-8"
-                    except UnicodeDecodeError:
-                        decoded = payload.decode("latin-1")
-                        detected = "latin-1"
-                rows.append({"doc_id": did, "detected": detected,
-                             "byte_len": len(payload),
-                             "n_chars": len(decoded),
-                             "text_md5": hashlib.md5(
-                                 decoded.encode("utf-8")).hexdigest()})
-            yield pd.DataFrame(rows)
+    def sniff(row):
+        did = row["doc_id"]
+        s = str(row["text"])
+        if did % 3 == 0:
+            payload = (s + " café—fin").encode("utf-8")
+        elif did % 3 == 1:
+            payload = s.encode("latin-1") + bytes([0xE9, 0x20, 0xFC])
+        else:
+            payload = "\ufeff".encode("utf-16-le") + s.encode("utf-16-le")
+        # --- the real detector ---
+        if payload[:2] in (b"\xff\xfe", b"\xfe\xff"):
+            enc = ("utf-16-le" if payload[:2] == b"\xff\xfe"
+                   else "utf-16-be")
+            decoded = payload[2:].decode(enc)
+            detected = enc
+        else:
+            try:
+                decoded = payload.decode("utf-8", "strict")
+                detected = "utf-8"
+            except UnicodeDecodeError:
+                decoded = payload.decode("latin-1")
+                detected = "latin-1"
+        return {"doc_id": did, "detected": detected,
+                "byte_len": len(payload), "n_chars": len(decoded),
+                "text_md5": hashlib.md5(decoded.encode("utf-8")).hexdigest()}
 
-    return (src.mapInPandas(sniff, "doc_id long, detected string,"
-                                   " byte_len long, n_chars long,"
-                                   " text_md5 string")
+    return (map_rows(src, sniff, "doc_id long, detected string,"
+                                 " byte_len long, n_chars long,"
+                                 " text_md5 string")
                .orderBy("doc_id"))
 
 
@@ -2012,8 +1949,6 @@ _MM_VOCAB = 50
 def _maxmatch_tokenize(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
 
-    import pandas as pd
-
     from .operators.text import tokens
     d = _t(spark, sf, "documents")
     vocab_rows = (d.select(F.explode(tokens(F.col("text"))).alias("t"))
@@ -2031,33 +1966,27 @@ def _maxmatch_tokenize(spark: SparkSession, sf: str) -> DataFrame:
                     F.substring("text", 1, _MM_PREFIX).alias("stub"))
             .repartition(spark.sparkContext.defaultParallelism))
 
-    def seg(it):
-        for pdf in it:
-            rows = []
-            for did, s in zip(pdf["doc_id"].astype("int64"),
-                              pdf["stub"]):
-                s = str(s)
-                pos, toks, nf = 0, [], 0
-                while pos < len(s):
-                    for ln in lengths:
-                        cand = s[pos:pos + ln]
-                        if len(cand) == ln and cand in by_len[ln]:
-                            toks.append(cand)
-                            pos += ln
-                            break
-                    else:
-                        toks.append(s[pos])
-                        nf += 1
-                        pos += 1
-                joined = "".join("|" + t for t in toks)
-                rows.append({"doc_id": int(did),
-                             "n_tok": len(toks), "n_fallback": nf,
-                             "toks_md5": hashlib.md5(
-                                 joined.encode("utf-8")).hexdigest()})
-            yield pd.DataFrame(rows)
+    def seg(row):
+        s = str(row["stub"])
+        pos, toks, nf = 0, [], 0
+        while pos < len(s):
+            for ln in lengths:
+                cand = s[pos:pos + ln]
+                if len(cand) == ln and cand in by_len[ln]:
+                    toks.append(cand)
+                    pos += ln
+                    break
+            else:
+                toks.append(s[pos])
+                nf += 1
+                pos += 1
+        joined = "".join("|" + t for t in toks)
+        return {"doc_id": row["doc_id"], "n_tok": len(toks),
+                "n_fallback": nf,
+                "toks_md5": hashlib.md5(joined.encode("utf-8")).hexdigest()}
 
-    return (src.mapInPandas(seg, "doc_id long, n_tok long,"
-                                 " n_fallback long, toks_md5 string")
+    return (map_rows(src, seg, "doc_id long, n_tok long,"
+                               " n_fallback long, toks_md5 string")
                .transform(_sorted1, "doc_id"))
 
 
@@ -2130,71 +2059,58 @@ ORDER BY doc_id
 
 def _jpeg420_decode_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from .operators.jpegcodec import decode_baseline, encode_baseline_ycbcr
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                y = np.zeros((32, 32), dtype=np.uint8)
-                for k in range(16):
-                    by, bx = divmod(k, 4)
-                    y[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = \
-                        (did * 31 + 97 * k) % 256
-                cbv = (did * 53 + 11) % 256
-                crv = (did * 71 + 29) % 256
-                if did % 2 == 0:
-                    cb = np.full((16, 16), cbv, dtype=np.uint8)
-                    cr = np.full((16, 16), crv, dtype=np.uint8)
-                    p = encode_baseline_ycbcr(
-                        y, cb, cr, sampling=((2, 2), (1, 1), (1, 1)),
-                        restart_interval=2)
-                else:
-                    cb = np.full((32, 16), cbv, dtype=np.uint8)
-                    cr = np.full((32, 16), crv, dtype=np.uint8)
-                    p = encode_baseline_ycbcr(
-                        y, cb, cr, sampling=((2, 1), (1, 1), (1, 1)))
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        did = row["doc_id"]
+        y = np.zeros((32, 32), dtype=np.uint8)
+        for k in range(16):
+            by, bx = divmod(k, 4)
+            y[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = \
+                (did * 31 + 97 * k) % 256
+        cbv = (did * 53 + 11) % 256
+        crv = (did * 71 + 29) % 256
+        if did % 2 == 0:
+            cb = np.full((16, 16), cbv, dtype=np.uint8)
+            cr = np.full((16, 16), crv, dtype=np.uint8)
+            p = encode_baseline_ycbcr(
+                y, cb, cr, sampling=((2, 2), (1, 1), (1, 1)),
+                restart_interval=2)
+        else:
+            cb = np.full((32, 16), cbv, dtype=np.uint8)
+            cr = np.full((32, 16), crv, dtype=np.uint8)
+            p = encode_baseline_ycbcr(
+                y, cb, cr, sampling=((2, 1), (1, 1), (1, 1)))
+        return {"doc_id": did, "payload": p}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = decode_baseline(bytes(p))
-                sam = r["sampling"]
-                samp = ("420" if sam == [(2, 2), (1, 1), (1, 1)] else
-                        "422" if sam == [(2, 1), (1, 1), (1, 1)] else
-                        "other")
-                yp = r["planes"][0].astype("int64")
-                cbp = r["planes"][1].astype("int64")
-                crp = r["planes"][2].astype("int64")
-                rows.append({
-                    "doc_id": int(did), "samp": samp,
-                    "out_w": r["width"], "out_h": r["height"],
-                    "y_sum": int(yp.sum()),
-                    "y_min": int(yp.min()), "y_max": int(yp.max()),
-                    "cb_const": int(cbp.min()),
-                    "cr_const": int(crp.min()),
-                    "chroma_flat": bool(cbp.min() == cbp.max()
-                                        and crp.min() == crp.max()
-                                        and cbp.shape == (32, 32)),
-                })
-            yield pd.DataFrame(rows)
+    def dec(row):
+        r = decode_baseline(row["payload"])
+        sam = r["sampling"]
+        samp = ("420" if sam == [(2, 2), (1, 1), (1, 1)] else
+                "422" if sam == [(2, 1), (1, 1), (1, 1)] else
+                "other")
+        yp = r["planes"][0].astype("int64")
+        cbp = r["planes"][1].astype("int64")
+        crp = r["planes"][2].astype("int64")
+        return {"doc_id": row["doc_id"], "samp": samp,
+                "out_w": r["width"], "out_h": r["height"],
+                "y_sum": int(yp.sum()),
+                "y_min": int(yp.min()), "y_max": int(yp.max()),
+                "cb_const": int(cbp.min()),
+                "cr_const": int(crp.min()),
+                "chroma_flat": bool(cbp.min() == cbp.max()
+                                    and crp.min() == crp.max()
+                                    and cbp.shape == (32, 32))}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, samp string, out_w long,"
-                                 " out_h long, y_sum long, y_min long,"
-                                 " y_max long, cb_const long,"
-                                 " cr_const long, chroma_flat boolean")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, samp string, out_w long,"
+                                  " out_h long, y_sum long, y_min long,"
+                                  " y_max long, cb_const long,"
+                                  " cr_const long, chroma_flat boolean")
                .transform(_sorted1, "doc_id"))
 
 
@@ -2321,8 +2237,6 @@ FROM documents ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _mp3_sideinfo_audit(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.bitio import MsbWriter
     from .operators.multimodal import (_MP3_BITRATES, _MP3_RATES,
                                        parse_mp3_sideinfo)
@@ -2330,56 +2244,43 @@ def _mp3_sideinfo_audit(spark: SparkSession, sf: str) -> DataFrame:
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def synth(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                bidx = 2 + did % 12
-                ridx = did % 3
-                nf = 2 + did % 3
-                br, sr = _MP3_BITRATES[bidx], _MP3_RATES[ridx]
-                flen = 144 * br * 1000 // sr
-                main_len = flen - 21
-                chunks = [b"ID3\x04\x00\x00" + bytes([0, 0, 0, 11])
-                          + b"tag-payload"]
-                for k in range(nf):
-                    hdr = bytes([0xFF, 0xFB,
-                                 (bidx << 4) | (ridx << 2), 0xC0])
-                    w = MsbWriter()
-                    mdb = min(511, k * main_len, 37 * k + did % 101)
-                    w.write(mdb, 9)
-                    w.write(0, 5)                # private
-                    w.write(0, 4)                # scfsi (mono)
-                    for g in range(2):
-                        w.write((did * 7 + k * 13 + g * 5) % 396,
-                                12)              # part2_3_length
-                        w.write((did * 3 + k + g) % 289, 9)
-                        w.write(0, 38)           # rest of gr block
-                    side = w.finish()
-                    chunks.append(hdr + side
-                                  + b"\x00" * (flen - 4 - len(side)))
-                payloads.append(b"".join(chunks))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def synth(row):
+        did = row["doc_id"]
+        bidx = 2 + did % 12
+        ridx = did % 3
+        nf = 2 + did % 3
+        br, sr = _MP3_BITRATES[bidx], _MP3_RATES[ridx]
+        flen = 144 * br * 1000 // sr
+        main_len = flen - 21
+        chunks = [b"ID3\x04\x00\x00" + bytes([0, 0, 0, 11])
+                  + b"tag-payload"]
+        for k in range(nf):
+            hdr = bytes([0xFF, 0xFB, (bidx << 4) | (ridx << 2), 0xC0])
+            w = MsbWriter()
+            mdb = min(511, k * main_len, 37 * k + did % 101)
+            w.write(mdb, 9)
+            w.write(0, 5)                # private
+            w.write(0, 4)                # scfsi (mono)
+            for g in range(2):
+                w.write((did * 7 + k * 13 + g * 5) % 396,
+                        12)              # part2_3_length
+                w.write((did * 3 + k + g) % 289, 9)
+                w.write(0, 38)           # rest of gr block
+            side = w.finish()
+            chunks.append(hdr + side + b"\x00" * (flen - 4 - len(side)))
+        return {"doc_id": did, "payload": b"".join(chunks)}
 
-    def probe(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = parse_mp3_sideinfo(bytes(p))
-                rows.append({"doc_id": int(did),
-                             "n_frames": r["n_frames"],
-                             "max_mdb": r["max_main_data_begin"],
-                             "sum_part23": r["sum_part23_bits"],
-                             "max_bigv": r["max_big_values"]})
-            yield pd.DataFrame(rows)
+    def probe(row):
+        r = parse_mp3_sideinfo(row["payload"])
+        return {"doc_id": row["doc_id"], "n_frames": r["n_frames"],
+                "max_mdb": r["max_main_data_begin"],
+                "sum_part23": r["sum_part23_bits"],
+                "max_bigv": r["max_big_values"]}
 
-    return (src.mapInPandas(synth, "doc_id long, payload binary")
-               .mapInPandas(probe, "doc_id long, n_frames long,"
-                                   " max_mdb long, sum_part23 long,"
-                                   " max_bigv long")
+    synth_df = map_rows(src, synth, "doc_id long, payload binary")
+    return (map_rows(synth_df, probe, "doc_id long, n_frames long,"
+                                      " max_mdb long, sum_part23 long,"
+                                      " max_bigv long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -2678,47 +2579,21 @@ ORDER BY r.lang, r.source, r.rk
 # ---------------------------------------------------------------------------
 
 def _jpeg_progressive_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    from .operators.jpegcodec import decode_baseline, encode_progressive_gray
+    from .operators.jpegcodec import (encode_progressive_gray, flat_quad_gray,
+                                      gray_decode_stats)
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                px = np.zeros((16, 16), dtype=np.uint8)
-                for k in range(4):
-                    by, bx = divmod(k, 2)
-                    px[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = \
-                        (did * 31 + 97 * k) % 256
-                payloads.append(encode_progressive_gray(
-                    px, ac_successive=(did % 2 == 1)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        did = row["doc_id"]
+        return {"doc_id": did, "payload": encode_progressive_gray(
+            flat_quad_gray(did * 31), ac_successive=(did % 2 == 1))}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = decode_baseline(bytes(p))
-                px = r["pixels"].astype("int64")
-                rows.append({"doc_id": int(did),
-                             "out_w": r["width"], "out_h": r["height"],
-                             "pix_sum": int(px.sum()),
-                             "pix_min": int(px.min()),
-                             "pix_max": int(px.max())})
-            yield pd.DataFrame(rows)
-
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, out_w long, out_h long,"
-                                 " pix_sum long, pix_min long,"
-                                 " pix_max long")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, gray_decode_stats,
+                     "doc_id long, out_w long, out_h long,"
+                     " pix_sum long, pix_min long, pix_max long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -2763,55 +2638,39 @@ FROM v ORDER BY doc_id
 
 def _png_adam7_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from .operators.multimodal import decode_png, encode_png
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                y, x = np.mgrid[0:16, 0:16]
-                rgb = np.stack([
-                    (did + 3 * x + 5 * y) % 256,
-                    (2 * did + 7 * x + y) % 256,
-                    (3 * did + x + 11 * y) % 256,
-                ], axis=-1).astype(np.uint8)
-                payloads.append(encode_png(rgb.tobytes(), 16,
-                                           interlace=(did % 2 == 0)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        did = row["doc_id"]
+        y, x = np.mgrid[0:16, 0:16]
+        rgb = np.stack([
+            (did + 3 * x + 5 * y) % 256,
+            (2 * did + 7 * x + y) % 256,
+            (3 * did + x + 11 * y) % 256,
+        ], axis=-1).astype(np.uint8)
+        return {"doc_id": did, "payload": encode_png(
+            rgb.tobytes(), 16, interlace=(did % 2 == 0))}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = decode_png(bytes(p))
-                rgb = r["rgb"].astype("int64")
-                y, x = np.mgrid[0:16, 0:16]
-                wgt = 1 + x + 16 * y
-                rows.append({
-                    "doc_id": int(did),
-                    "interlaced": bool(r["interlaced"]),
-                    "mean_r_milli": r["mean_r_milli"],
-                    "mean_g_milli": r["mean_g_milli"],
-                    "mean_b_milli": r["mean_b_milli"],
-                    "moment_r": int((wgt * rgb[:, :, 0]).sum()),
-                    "moment_g": int((wgt * rgb[:, :, 1]).sum()),
-                    "moment_b": int((wgt * rgb[:, :, 2]).sum()),
-                })
-            yield pd.DataFrame(rows)
+    def dec(row):
+        r = decode_png(row["payload"])
+        rgb = r["rgb"].astype("int64")
+        y, x = np.mgrid[0:16, 0:16]
+        wgt = 1 + x + 16 * y
+        return {**r, "doc_id": row["doc_id"],
+                "interlaced": bool(r["interlaced"]),
+                "moment_r": int((wgt * rgb[:, :, 0]).sum()),
+                "moment_g": int((wgt * rgb[:, :, 1]).sum()),
+                "moment_b": int((wgt * rgb[:, :, 2]).sum())}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, interlaced boolean,"
-                                 " mean_r_milli long, mean_g_milli long,"
-                                 " mean_b_milli long, moment_r long,"
-                                 " moment_g long, moment_b long")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, interlaced boolean,"
+                                  " mean_r_milli long, mean_g_milli long,"
+                                  " mean_b_milli long, moment_r long,"
+                                  " moment_g long, moment_b long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -2864,58 +2723,41 @@ FROM v ORDER BY doc_id
 
 def _gif_decode_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from .operators.multimodal import decode_gif, encode_gif
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                y, x = np.mgrid[0:16, 0:16]
-                idx = ((did + 2 * x + 3 * y) % 16).astype(np.uint8)
-                i = np.arange(16)
-                pal = np.stack([(did * 5 + 17 * i) % 256,
-                                (did * 7 + 29 * i) % 256,
-                                (did * 11 + 41 * i) % 256],
-                               axis=-1).astype(np.uint8)
-                payloads.append(encode_gif(idx, pal,
-                                           interlace=(did % 2 == 0)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        did = row["doc_id"]
+        y, x = np.mgrid[0:16, 0:16]
+        idx = ((did + 2 * x + 3 * y) % 16).astype(np.uint8)
+        i = np.arange(16)
+        pal = np.stack([(did * 5 + 17 * i) % 256,
+                        (did * 7 + 29 * i) % 256,
+                        (did * 11 + 41 * i) % 256],
+                       axis=-1).astype(np.uint8)
+        return {"doc_id": did, "payload": encode_gif(
+            idx, pal, interlace=(did % 2 == 0))}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = decode_gif(bytes(p))
-                rgb = r["rgb"].astype("int64")
-                y, x = np.mgrid[0:16, 0:16]
-                wgt = 1 + x + 16 * y
-                rows.append({
-                    "doc_id": int(did),
-                    "interlaced": bool(r["interlaced"]),
-                    "palette_size": r["palette_size"],
-                    "mean_r_milli": r["mean_r_milli"],
-                    "mean_g_milli": r["mean_g_milli"],
-                    "mean_b_milli": r["mean_b_milli"],
-                    "moment_r": int((wgt * rgb[:, :, 0]).sum()),
-                    "moment_g": int((wgt * rgb[:, :, 1]).sum()),
-                    "moment_b": int((wgt * rgb[:, :, 2]).sum()),
-                })
-            yield pd.DataFrame(rows)
+    def dec(row):
+        r = decode_gif(row["payload"])
+        rgb = r["rgb"].astype("int64")
+        y, x = np.mgrid[0:16, 0:16]
+        wgt = 1 + x + 16 * y
+        return {**r, "doc_id": row["doc_id"],
+                "interlaced": bool(r["interlaced"]),
+                "moment_r": int((wgt * rgb[:, :, 0]).sum()),
+                "moment_g": int((wgt * rgb[:, :, 1]).sum()),
+                "moment_b": int((wgt * rgb[:, :, 2]).sum())}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, interlaced boolean,"
-                                 " palette_size long,"
-                                 " mean_r_milli long, mean_g_milli long,"
-                                 " mean_b_milli long, moment_r long,"
-                                 " moment_g long, moment_b long")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, interlaced boolean,"
+                                  " palette_size long,"
+                                  " mean_r_milli long, mean_g_milli long,"
+                                  " mean_b_milli long, moment_r long,"
+                                  " moment_g long, moment_b long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -2973,49 +2815,31 @@ FROM v ORDER BY doc_id
 def _g711_wav_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import struct
 
-    import pandas as pd
-
     from .operators.multimodal import decode_wav
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def synth(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                n = 64 + did % 64
-                data = bytes((did * 13 + 7 * i) % 256 for i in range(n))
-                fmt = 7 if did % 2 == 0 else 6
-                fmtc = struct.pack("<HHIIHH", fmt, 1, 8000, 8000, 1, 8)
-                body = (b"WAVE" + b"fmt "
-                        + struct.pack("<I", len(fmtc)) + fmtc
-                        + b"data" + struct.pack("<I", len(data)) + data
-                        + (b"\0" if len(data) & 1 else b""))
-                payloads.append(b"RIFF" + struct.pack("<I", len(body))
-                                + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def synth(row):
+        did = row["doc_id"]
+        n = 64 + did % 64
+        data = bytes((did * 13 + 7 * i) % 256 for i in range(n))
+        fmt = 7 if did % 2 == 0 else 6
+        fmtc = struct.pack("<HHIIHH", fmt, 1, 8000, 8000, 1, 8)
+        body = (b"WAVE" + b"fmt "
+                + struct.pack("<I", len(fmtc)) + fmtc
+                + b"data" + struct.pack("<I", len(data)) + data
+                + (b"\0" if len(data) & 1 else b""))
+        return {"doc_id": did,
+                "payload": b"RIFF" + struct.pack("<I", len(body)) + body}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = decode_wav(bytes(p))
-                rows.append({"doc_id": int(did),
-                             "audio_format": r["audio_format"],
-                             "n_frames": r["n_frames"],
-                             "duration_ms": r["duration_ms"],
-                             "sample_sum": r["sample_sum"],
-                             "ms_amplitude": r["ms_amplitude"]})
-            yield pd.DataFrame(rows)
+    def dec(row):
+        return {**decode_wav(row["payload"]), "doc_id": row["doc_id"]}
 
-    return (src.mapInPandas(synth, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, audio_format long,"
-                                 " n_frames long, duration_ms long,"
-                                 " sample_sum long, ms_amplitude long")
+    synth_df = map_rows(src, synth, "doc_id long, payload binary")
+    return (map_rows(synth_df, dec, "doc_id long, audio_format long,"
+                                    " n_frames long, duration_ms long,"
+                                    " sample_sum long, ms_amplitude long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -3079,66 +2903,42 @@ FROM x GROUP BY doc_id, n ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _avi_mjpeg_frame_sample(spark: SparkSession, sf: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    from .operators.jpegcodec import decode_baseline, encode_baseline_gray
+    from .operators.jpegcodec import (decode_baseline, encode_baseline_gray,
+                                      flat_quad_gray)
     from .operators.multimodal import encode_avi_mjpeg, parse_avi
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
     interval_ms = 100
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                n = 4 + did % 5
-                uspf = 20000 * (1 + did % 3)
-                frames = []
-                for f in range(n):
-                    px = np.zeros((16, 16), dtype=np.uint8)
-                    for k in range(4):
-                        v = (did * 31 + 97 * k + 13 * f) % 256
-                        by, bx = divmod(k, 2)
-                        px[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = v
-                    frames.append(encode_baseline_gray(px))
-                payloads.append(
-                    encode_avi_mjpeg(frames, 16, 16, us_per_frame=uspf))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        did = row["doc_id"]
+        frames = [encode_baseline_gray(flat_quad_gray(did * 31 + 13 * f))
+                  for f in range(4 + did % 5)]
+        return {"doc_id": did, "payload": encode_avi_mjpeg(
+            frames, 16, 16, us_per_frame=20000 * (1 + did % 3))}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = parse_avi(bytes(p))
-                # stride from PARSED container metadata, not doc_id
-                stride = max(1, (interval_ms * 1000) // r["us_per_frame"])
-                sums, mins, maxs = [], [], []
-                for f in range(0, len(r["frames"]), stride):
-                    px = decode_baseline(
-                        r["frames"][f])["pixels"].astype("int64")
-                    sums.append(int(px.sum()))
-                    mins.append(int(px.min()))
-                    maxs.append(int(px.max()))
-                rows.append({"doc_id": int(did),
-                             "n_frames": len(r["frames"]),
-                             "fps_milli": r["fps_milli"],
-                             "idx_consistent": bool(r["idx_consistent"]),
-                             "sampled_frames": len(sums),
-                             "luma_sum": sum(sums),
-                             "luma_min": min(mins),
-                             "luma_max": max(maxs)})
-            yield pd.DataFrame(rows)
+    def dec(row):
+        r = parse_avi(row["payload"])
+        # stride from PARSED container metadata, not doc_id
+        stride = max(1, (interval_ms * 1000) // r["us_per_frame"])
+        sums, mins, maxs = [], [], []
+        for f in range(0, len(r["frames"]), stride):
+            px = decode_baseline(r["frames"][f])["pixels"].astype("int64")
+            sums.append(int(px.sum()))
+            mins.append(int(px.min()))
+            maxs.append(int(px.max()))
+        return {"doc_id": row["doc_id"], "n_frames": len(r["frames"]),
+                "fps_milli": r["fps_milli"],
+                "idx_consistent": bool(r["idx_consistent"]),
+                "sampled_frames": len(sums), "luma_sum": sum(sums),
+                "luma_min": min(mins), "luma_max": max(maxs)}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, n_frames long,"
-                                 " fps_milli long, idx_consistent boolean,"
-                                 " sampled_frames long, luma_sum long,"
-                                 " luma_min long, luma_max long")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, n_frames long,"
+                                  " fps_milli long, idx_consistent boolean,"
+                                  " sampled_frames long, luma_sum long,"
+                                  " luma_min long, luma_max long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -3199,55 +2999,37 @@ FROM a GROUP BY doc_id, n, uspf ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _adpcm_wav_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.multimodal import decode_wav_ima, encode_wav_ima
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                blocks = []
-                for b in range(2):
-                    pred0 = ((did + b) * 997) % 4001 - 2000
-                    idx0 = (did + 3 * b) % 89
-                    nibs = [(did * 7 + (b * 64 + i) * 13) % 16
-                            for i in range(64)]
-                    blocks.append((pred0, idx0, nibs))
-                payloads.append(encode_wav_ima(blocks))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        did = row["doc_id"]
+        blocks = []
+        for b in range(2):
+            pred0 = ((did + b) * 997) % 4001 - 2000
+            idx0 = (did + 3 * b) % 89
+            nibs = [(did * 7 + (b * 64 + i) * 13) % 16 for i in range(64)]
+            blocks.append((pred0, idx0, nibs))
+        return {"doc_id": did, "payload": encode_wav_ima(blocks)}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = decode_wav_ima(bytes(p))
-                s = r["samples"]
-                spb = r["samples_per_block"]
-                rows.append({"doc_id": int(did),
-                             "n_blocks": r["n_blocks"],
-                             "samples_per_block": spb,
-                             "n_samples": len(s),
-                             "duration_ms": len(s) * 1000
-                             // r["sample_rate"],
-                             "sample_sum": sum(s),
-                             "max_abs": max(abs(v) for v in s),
-                             "last_b0": s[spb - 1],
-                             "last_b1": s[2 * spb - 1]})
-            yield pd.DataFrame(rows)
+    def dec(row):
+        r = decode_wav_ima(row["payload"])
+        s = r["samples"]
+        spb = r["samples_per_block"]
+        return {"doc_id": row["doc_id"], "n_blocks": r["n_blocks"],
+                "samples_per_block": spb, "n_samples": len(s),
+                "duration_ms": len(s) * 1000 // r["sample_rate"],
+                "sample_sum": sum(s), "max_abs": max(abs(v) for v in s),
+                "last_b0": s[spb - 1], "last_b1": s[2 * spb - 1]}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, n_blocks long,"
-                                 " samples_per_block long,"
-                                 " n_samples long, duration_ms long,"
-                                 " sample_sum long, max_abs long,"
-                                 " last_b0 long, last_b1 long")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, n_blocks long,"
+                                  " samples_per_block long,"
+                                  " n_samples long, duration_ms long,"
+                                  " sample_sum long, max_abs long,"
+                                  " last_b0 long, last_b1 long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -3344,51 +3126,37 @@ GROUP BY doc_id ORDER BY doc_id
 
 def _tiff_decode_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from .operators.multimodal import decode_tiff_gray, encode_tiff_gray
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                y, x = np.mgrid[0:16, 0:16]
-                px = ((did + 2 * x + 3 * y) % 256).astype(np.uint8)
-                payloads.append(encode_tiff_gray(
-                    px, compression=5 if did % 2 == 0 else 1,
-                    big_endian=(did % 3 == 0)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        did = row["doc_id"]
+        y, x = np.mgrid[0:16, 0:16]
+        px = ((did + 2 * x + 3 * y) % 256).astype(np.uint8)
+        return {"doc_id": did, "payload": encode_tiff_gray(
+            px, compression=5 if did % 2 == 0 else 1,
+            big_endian=(did % 3 == 0))}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = decode_tiff_gray(bytes(p))
-                px = r["pixels"].astype("int64")
-                y, x = np.mgrid[0:16, 0:16]
-                rows.append({"doc_id": int(did),
-                             "compression": r["compression"],
-                             "predictor": r["predictor"],
-                             "big_endian": r["byte_order"] == "big",
-                             "n_strips": r["n_strips"],
-                             "pix_sum": int(px.sum()),
-                             "moment": int(((1 + x + 16 * y) * px).sum()),
-                             "pix_min": int(px.min()),
-                             "pix_max": int(px.max())})
-            yield pd.DataFrame(rows)
+    def dec(row):
+        r = decode_tiff_gray(row["payload"])
+        px = r["pixels"].astype("int64")
+        y, x = np.mgrid[0:16, 0:16]
+        return {"doc_id": row["doc_id"], "compression": r["compression"],
+                "predictor": r["predictor"],
+                "big_endian": r["byte_order"] == "big",
+                "n_strips": r["n_strips"], "pix_sum": int(px.sum()),
+                "moment": int(((1 + x + 16 * y) * px).sum()),
+                "pix_min": int(px.min()), "pix_max": int(px.max())}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, compression long,"
-                                 " predictor long, big_endian boolean,"
-                                 " n_strips long, pix_sum long,"
-                                 " moment long, pix_min long,"
-                                 " pix_max long")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, compression long,"
+                                  " predictor long, big_endian boolean,"
+                                  " n_strips long, pix_sum long,"
+                                  " moment long, pix_min long,"
+                                  " pix_max long")
                .transform(_sorted1, "doc_id"))
 
 

@@ -5,6 +5,8 @@ queries_scale_common.py for why the split is positional. Import order
 (queries_scale.py) IS the registration order; do not reorder.
 """
 
+from .operators.seam import map_rows
+from .operators.spread import fanout, group_spread
 from .queries_scale_common import *  # noqa: F401,F403
 from .queries_scale_part1 import (  # noqa: F401 — earlier-part helpers
     _ANN_QUERY_IDS, _ENP_PLANES, _ENP_THRESHOLD,
@@ -182,31 +184,24 @@ _BLOCKLIST = ("value", "fast", "fast table", "a a",
 
 
 def _blocklist_screen(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.text import ac_count_all, build_aho_corasick
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
     pats = _BLOCKLIST
 
-    def scan(it):
-        ac = build_aho_corasick(list(pats))
-        for pdf in it:
-            rows = []
-            for did, txt in zip(pdf["doc_id"].astype("int64"),
-                                pdf["text"]):
-                c = ac_count_all(ac, txt or "")
-                rows.append({"doc_id": int(did),
-                             **{f"n_{i}": c[i] for i in range(len(pats))},
-                             "total": sum(c),
-                             "n_patterns": sum(1 for v in c if v),
-                             "blocked": any(c)})
-            yield pd.DataFrame(rows)
+    ac = build_aho_corasick(list(pats))
+
+    def scan(row):
+        c = ac_count_all(ac, row["text"] or "")
+        return {"doc_id": row["doc_id"],
+                **{f"n_{i}": c[i] for i in range(len(pats))},
+                "total": sum(c), "n_patterns": sum(1 for v in c if v),
+                "blocked": any(c)}
 
     cols = ", ".join(f"n_{i} long" for i in range(len(pats)))
-    return (src.mapInPandas(scan, f"doc_id long, {cols}, total long,"
-                                  " n_patterns long, blocked boolean")
+    return (map_rows(src, scan, f"doc_id long, {cols}, total long,"
+                                " n_patterns long, blocked boolean")
                .transform(_sorted1, "doc_id"))
 
 
@@ -764,7 +759,7 @@ def _tfrecord_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         return pd.DataFrame({"shard": [int(key[0])],
                              "payload": [frame_records(records)]})
 
-    shards = _spread(d, "shard", 32).groupBy("shard").applyInPandas(
+    shards = group_spread(d, "shard", 32).groupBy("shard").applyInPandas(
         build, "shard long, payload binary")
 
     def unpack(it):
@@ -877,7 +872,7 @@ def _avro_container_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
                                                    recs, sync,
                                                    block_records=8)]})
 
-    shards = _spread(d, "shard", 32).groupBy("shard").applyInPandas(
+    shards = group_spread(d, "shard", 32).groupBy("shard").applyInPandas(
         build, "shard long, payload binary")
 
     def unpack(it):
@@ -985,7 +980,7 @@ def _avro_snappy_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         return pd.DataFrame({"shard": [s], "payload": [snappy],
                              "saved": [len(null) - len(snappy)]})
 
-    shards = _spread(d, "shard", 32).groupBy("shard").applyInPandas(
+    shards = group_spread(d, "shard", 32).groupBy("shard").applyInPandas(
         build, "shard long, payload binary, saved long")
 
     def unpack(it):
@@ -1063,28 +1058,21 @@ ORDER BY d.doc_id
 # ---------------------------------------------------------------------------
 
 def _longest_repeated(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.text import longest_repeated_substring
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def scan(it):
-        for pdf in it:
-            rows = []
-            for did, txt in zip(pdf["doc_id"].astype("int64"),
-                                pdf["text"]):
-                s = (txt or "")[:64]
-                ln, w = longest_repeated_substring(s)
-                occ = (sum(1 for i in range(len(s) - ln + 1)
-                           if s[i:i + ln] == w) if ln else 0)
-                rows.append({"doc_id": int(did), "lrs_len": ln,
-                             "lrs": w, "occurrences": occ})
-            yield pd.DataFrame(rows)
+    def scan(row):
+        s = (row["text"] or "")[:64]
+        ln, w = longest_repeated_substring(s)
+        occ = (sum(1 for i in range(len(s) - ln + 1)
+                   if s[i:i + ln] == w) if ln else 0)
+        return {"doc_id": row["doc_id"], "lrs_len": ln, "lrs": w,
+                "occurrences": occ}
 
-    return (src.mapInPandas(scan, "doc_id long, lrs_len long,"
-                                  " lrs string, occurrences long")
+    return (map_rows(src, scan, "doc_id long, lrs_len long,"
+                                " lrs string, occurrences long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -1138,44 +1126,32 @@ ORDER BY p.doc_id
 # ---------------------------------------------------------------------------
 
 def _mp4_sample_table_probe(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.multimodal import (build_mp4_sample_table,
                                        parse_mp4_samples)
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                n = 8 + did % 5
-                samples = [bytes([(did * 13 + i * 7) % 256])
-                           * (4 + (did + i) % 3) for i in range(n)]
-                d1 = 100 + (did % 3) * 20
-                stts = [(4, d1), (n - 4, 200)]
-                chunks = [3] * (n // 3) + ([n % 3] if n % 3 else [])
-                mp4 = build_mp4_sample_table(samples, stts, chunks)
-                r = parse_mp4_samples(mp4)
-                ss = r["samples"]
-                rows.append({
-                    "doc_id": did,
-                    "n_samples": r["n_samples"],
-                    "n_chunks": r["n_chunks"],
-                    "duration": r["duration"],
-                    "total_bytes": sum(s["size"] for s in ss),
-                    "sum_offsets": sum(s["offset"] for s in ss),
-                    "sum_dts": sum(s["dts"] for s in ss),
-                    "sum_first_bytes": sum(s["first_byte"]
-                                           for s in ss)})
-            yield pd.DataFrame(rows)
+    def run(row):
+        did = row["doc_id"]
+        n = 8 + did % 5
+        samples = [bytes([(did * 13 + i * 7) % 256])
+                   * (4 + (did + i) % 3) for i in range(n)]
+        d1 = 100 + (did % 3) * 20
+        stts = [(4, d1), (n - 4, 200)]
+        chunks = [3] * (n // 3) + ([n % 3] if n % 3 else [])
+        r = parse_mp4_samples(build_mp4_sample_table(samples, stts, chunks))
+        ss = r["samples"]
+        return {**r, "doc_id": did,
+                "total_bytes": sum(s["size"] for s in ss),
+                "sum_offsets": sum(s["offset"] for s in ss),
+                "sum_dts": sum(s["dts"] for s in ss),
+                "sum_first_bytes": sum(s["first_byte"] for s in ss)}
 
-    return (src.mapInPandas(run, "doc_id long, n_samples long,"
-                                 " n_chunks long, duration long,"
-                                 " total_bytes long, sum_offsets long,"
-                                 " sum_dts long, sum_first_bytes long")
+    return (map_rows(src, run, "doc_id long, n_samples long,"
+                               " n_chunks long, duration long,"
+                               " total_bytes long, sum_offsets long,"
+                               " sum_dts long, sum_first_bytes long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -1432,7 +1408,7 @@ def _arrow_ipc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         return pd.DataFrame({"shard": [s], "path": [path],
                              "n_rows": [table.num_rows]})
 
-    shards = _spread(d, "shard", 16).groupBy("shard").applyInPandas(
+    shards = group_spread(d, "shard", 16).groupBy("shard").applyInPandas(
         write_shards, "shard long, path string, n_rows long")
 
     def read_back(it):
@@ -1497,54 +1473,40 @@ ORDER BY d.doc_id
 
 def _png_palette_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from .operators.multimodal import decode_png, encode_png_palette
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                y, x = np.mgrid[0:16, 0:16]
-                idx = ((did + 2 * x + 3 * y) % 16).astype(np.uint8)
-                i = np.arange(16)
-                pal = np.stack([(did * 5 + 17 * i) % 256,
-                                (did * 7 + 29 * i) % 256,
-                                (did * 11 + 41 * i) % 256],
-                               axis=-1).astype(np.uint8)
-                payloads.append(encode_png_palette(
-                    idx, pal, interlace=(did % 2 == 1)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        did = row["doc_id"]
+        y, x = np.mgrid[0:16, 0:16]
+        idx = ((did + 2 * x + 3 * y) % 16).astype(np.uint8)
+        i = np.arange(16)
+        pal = np.stack([(did * 5 + 17 * i) % 256,
+                        (did * 7 + 29 * i) % 256,
+                        (did * 11 + 41 * i) % 256],
+                       axis=-1).astype(np.uint8)
+        return {"doc_id": did, "payload": encode_png_palette(
+            idx, pal, interlace=(did % 2 == 1))}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = decode_png(bytes(p))
-                rgb = r["rgb"].astype("int64")
-                y, x = np.mgrid[0:16, 0:16]
-                wgt = 1 + x + 16 * y
-                rows.append({
-                    "doc_id": int(did),
-                    "interlaced": bool(r["interlaced"]),
-                    "palette_size": r["palette_size"],
-                    "bits_per_pixel": r["bits_per_pixel"],
-                    "moment_r": int((wgt * rgb[:, :, 0]).sum()),
-                    "moment_g": int((wgt * rgb[:, :, 1]).sum()),
-                    "moment_b": int((wgt * rgb[:, :, 2]).sum())})
-            yield pd.DataFrame(rows)
+    def dec(row):
+        r = decode_png(row["payload"])
+        rgb = r["rgb"].astype("int64")
+        y, x = np.mgrid[0:16, 0:16]
+        wgt = 1 + x + 16 * y
+        return {**r, "doc_id": row["doc_id"],
+                "interlaced": bool(r["interlaced"]),
+                "moment_r": int((wgt * rgb[:, :, 0]).sum()),
+                "moment_g": int((wgt * rgb[:, :, 1]).sum()),
+                "moment_b": int((wgt * rgb[:, :, 2]).sum())}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, interlaced boolean,"
-                                 " palette_size long,"
-                                 " bits_per_pixel long, moment_r long,"
-                                 " moment_g long, moment_b long")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, interlaced boolean,"
+                                  " palette_size long,"
+                                  " bits_per_pixel long, moment_r long,"
+                                  " moment_g long, moment_b long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -1585,7 +1547,6 @@ FROM px GROUP BY doc_id ORDER BY doc_id
 
 def _tiff_multipage_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from .operators.multimodal import (decode_tiff_pages,
                                        encode_tiff_multipage)
@@ -1593,47 +1554,36 @@ def _tiff_multipage_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                y, x = np.mgrid[0:16, 0:16]
-                pages = [((did + 5 * p + 2 * x + 3 * y) % 256)
-                         .astype(np.uint8)
-                         for p in range(2 + did % 2)]
-                payloads.append(encode_tiff_multipage(
-                    pages, compression=5 if did % 2 == 0 else 1,
-                    big_endian=(did % 3 == 0)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        did = row["doc_id"]
+        y, x = np.mgrid[0:16, 0:16]
+        pages = [((did + 5 * p + 2 * x + 3 * y) % 256).astype(np.uint8)
+                 for p in range(2 + did % 2)]
+        return {"doc_id": did, "payload": encode_tiff_multipage(
+            pages, compression=5 if did % 2 == 0 else 1,
+            big_endian=(did % 3 == 0))}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                ps = decode_tiff_pages(bytes(p))
-                tot = mom = 0
-                mn, mx = 255, 0
-                for pi, pg in enumerate(ps):
-                    px = pg["pixels"].astype("int64")
-                    tot += int(px.sum())
-                    mom += (pi + 1) * int(px.sum())
-                    mn = min(mn, int(px.min()))
-                    mx = max(mx, int(px.max()))
-                rows.append({"doc_id": int(did), "n_pages": len(ps),
-                             "big_endian": ps[0]["byte_order"] == "big",
-                             "compression": ps[0]["compression"],
-                             "pix_sum": tot, "page_moment": mom,
-                             "pix_min": mn, "pix_max": mx})
-            yield pd.DataFrame(rows)
+    def dec(row):
+        ps = decode_tiff_pages(row["payload"])
+        tot = mom = 0
+        mn, mx = 255, 0
+        for pi, pg in enumerate(ps):
+            px = pg["pixels"].astype("int64")
+            tot += int(px.sum())
+            mom += (pi + 1) * int(px.sum())
+            mn = min(mn, int(px.min()))
+            mx = max(mx, int(px.max()))
+        return {"doc_id": row["doc_id"], "n_pages": len(ps),
+                "big_endian": ps[0]["byte_order"] == "big",
+                "compression": ps[0]["compression"],
+                "pix_sum": tot, "page_moment": mom,
+                "pix_min": mn, "pix_max": mx}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, n_pages long,"
-                                 " big_endian boolean, compression long,"
-                                 " pix_sum long, page_moment long,"
-                                 " pix_min long, pix_max long")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, n_pages long,"
+                                  " big_endian boolean, compression long,"
+                                  " pix_sum long, page_moment long,"
+                                  " pix_min long, pix_max long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -1679,49 +1629,38 @@ FROM px GROUP BY doc_id, n ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _webm_block_probe(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.multimodal import encode_webm_blocks, parse_webm
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                nc = 2 + did % 2
-                clusters = []
-                for c in range(nc):
-                    nb = 2 + (did + c) % 2
-                    blocks = []
-                    for b in range(nb):
-                        rel = 40 * b + (did % 7) - 3
-                        payload = bytes([(did * 13 + 5 * c + 7 * b)
-                                         % 256]) * (3 + b)
-                        blocks.append((rel, b == 0, payload))
-                    clusters.append((500 * c, blocks))
-                w = encode_webm_blocks(clusters,
-                                       duration_ts=500 * nc)
-                r = parse_webm(w)
-                bl = r["blocks"]
-                rows.append({
-                    "doc_id": did,
-                    "n_clusters": r["n_clusters"],
-                    "n_blocks": len(bl),
-                    "keyframes": sum(1 for x in bl if x["key"]),
-                    "ts_sum": sum(x["abs_ts"] for x in bl),
-                    "payload_bytes": sum(x["size"] for x in bl),
-                    "first_byte_sum": sum(x["first_byte"] for x in bl),
-                    "timestamp_scale": r["timestamp_scale"]})
-            yield pd.DataFrame(rows)
+    def run(row):
+        did = row["doc_id"]
+        nc = 2 + did % 2
+        clusters = []
+        for c in range(nc):
+            nb = 2 + (did + c) % 2
+            blocks = []
+            for b in range(nb):
+                rel = 40 * b + (did % 7) - 3
+                payload = bytes([(did * 13 + 5 * c + 7 * b) % 256]) * (3 + b)
+                blocks.append((rel, b == 0, payload))
+            clusters.append((500 * c, blocks))
+        r = parse_webm(encode_webm_blocks(clusters, duration_ts=500 * nc))
+        bl = r["blocks"]
+        return {"doc_id": did, "n_clusters": r["n_clusters"],
+                "n_blocks": len(bl),
+                "keyframes": sum(1 for x in bl if x["key"]),
+                "ts_sum": sum(x["abs_ts"] for x in bl),
+                "payload_bytes": sum(x["size"] for x in bl),
+                "first_byte_sum": sum(x["first_byte"] for x in bl),
+                "timestamp_scale": r["timestamp_scale"]}
 
-    return (src.mapInPandas(run, "doc_id long, n_clusters long,"
-                                 " n_blocks long, keyframes long,"
-                                 " ts_sum long, payload_bytes long,"
-                                 " first_byte_sum long,"
-                                 " timestamp_scale long")
+    return (map_rows(src, run, "doc_id long, n_clusters long,"
+                               " n_blocks long, keyframes long,"
+                               " ts_sum long, payload_bytes long,"
+                               " first_byte_sum long,"
+                               " timestamp_scale long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -1766,8 +1705,6 @@ FROM b GROUP BY doc_id, nc ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _h264_sps_probe(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.multimodal import encode_h264_annexb, parse_h264_annexb
 
     d = _t(spark, sf, "documents").select("doc_id")
@@ -1775,33 +1712,23 @@ def _h264_sps_probe(spark: SparkSession, sf: str) -> DataFrame:
     dims = [(1920, 1080), (1280, 720), (640, 360), (354, 288),
             (1918, 1078)]
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                w, h = dims[did % 5]
-                n_idr, n_non = 1 + did % 3, 2 + did % 4
-                s = encode_h264_annexb(w, h, n_idr=n_idr,
-                                       n_nonidr=n_non,
-                                       profile=66 + (did % 2) * 11,
-                                       level=30 + (did % 3) * 10)
-                r = parse_h264_annexb(s)
-                rows.append({
-                    "doc_id": did,
-                    "width": r["width"], "height": r["height"],
-                    "profile_idc": r["profile_idc"],
-                    "level_idc": r["level_idc"],
-                    "n_nals": r["n_nals"],
-                    "idr_nals": r["nal_census"].get(5, 0),
-                    "nonidr_nals": r["nal_census"].get(1, 0),
-                    "hd_gate": r["width"] * r["height"] >= 1280 * 720})
-            yield pd.DataFrame(rows)
+    def run(row):
+        did = row["doc_id"]
+        w, h = dims[did % 5]
+        s = encode_h264_annexb(w, h, n_idr=1 + did % 3,
+                               n_nonidr=2 + did % 4,
+                               profile=66 + (did % 2) * 11,
+                               level=30 + (did % 3) * 10)
+        r = parse_h264_annexb(s)
+        return {**r, "doc_id": did,
+                "idr_nals": r["nal_census"].get(5, 0),
+                "nonidr_nals": r["nal_census"].get(1, 0),
+                "hd_gate": r["width"] * r["height"] >= 1280 * 720}
 
-    return (src.mapInPandas(run, "doc_id long, width long, height long,"
-                                 " profile_idc long, level_idc long,"
-                                 " n_nals long, idr_nals long,"
-                                 " nonidr_nals long, hd_gate boolean")
+    return (map_rows(src, run, "doc_id long, width long, height long,"
+                               " profile_idc long, level_idc long,"
+                               " n_nals long, idr_nals long,"
+                               " nonidr_nals long, hd_gate boolean")
                .transform(_sorted1, "doc_id"))
 
 
@@ -1879,7 +1806,7 @@ def _crawl_token_bucket(spark: SparkSession, sf: str) -> DataFrame:
                          "tokens_after": tokens})
         return pd.DataFrame(rows)
 
-    return (_spread(d, "domain", 20).groupBy("domain").applyInPandas(
+    return (group_spread(d, "domain", 20).groupBy("domain").applyInPandas(
                 bucket, "doc_id long, domain long, arrival_ms long,"
                         " allowed boolean, tokens_after long")
             .transform(_sorted1, "doc_id"))
@@ -2079,7 +2006,6 @@ FROM m ORDER BY source
 
 def _media_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from .operators.jpegcodec import decode_baseline, encode_baseline_gray
     from .operators.multimodal import encode_avi_mjpeg, parse_avi
@@ -2087,42 +2013,31 @@ def _media_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                b, t = did % 40, did % 3
-                frames = []
-                for f in range(3):
-                    px = np.zeros((16, 16), dtype=np.uint8)
-                    for k in range(4):
-                        v = (b * 31 + 97 * k + 13 * f) % 256
-                        if t > 0 and f == 0 and k == 0:
-                            v = (v + 40 * t) % 256
-                        by, bx = divmod(k, 2)
-                        px[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = v
-                    frames.append(encode_baseline_gray(px))
-                payloads.append(encode_avi_mjpeg(frames, 16, 16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        did = row["doc_id"]
+        b, t = did % 40, did % 3
+        frames = []
+        for f in range(3):
+            px = np.zeros((16, 16), dtype=np.uint8)
+            for k in range(4):
+                v = (b * 31 + 97 * k + 13 * f) % 256
+                if t > 0 and f == 0 and k == 0:
+                    v = (v + 40 * t) % 256
+                by, bx = divmod(k, 2)
+                px[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = v
+            frames.append(encode_baseline_gray(px))
+        return {"doc_id": did, "payload": encode_avi_mjpeg(frames, 16, 16)}
 
-    def thumb(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = parse_avi(bytes(p))
-                px = decode_baseline(r["frames"][0])["pixels"]
-                rows.append({"doc_id": int(did),
-                             "base": int(did) % 40,
-                             "k0": int(px[0, 0]), "k1": int(px[0, 8]),
-                             "k2": int(px[8, 0]), "k3": int(px[8, 8])})
-            yield pd.DataFrame(rows)
+    def thumb(row):
+        r = parse_avi(row["payload"])
+        px = decode_baseline(r["frames"][0])["pixels"]
+        return {"doc_id": row["doc_id"], "base": row["doc_id"] % 40,
+                "k0": int(px[0, 0]), "k1": int(px[0, 8]),
+                "k2": int(px[8, 0]), "k3": int(px[8, 8])}
 
-    thumbs = (src.mapInPandas(enc, "doc_id long, payload binary")
-              .mapInPandas(thumb, "doc_id long, base long, k0 long,"
-                                  " k1 long, k2 long, k3 long"))
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    thumbs = map_rows(enc_df, thumb, "doc_id long, base long, k0 long,"
+                                     " k1 long, k2 long, k3 long")
     keys = (thumbs.groupBy("base", "k0", "k1", "k2", "k3")
             .agg(F.min("doc_id").alias("survivor"),
                  F.count(F.lit(1)).alias("members")))
@@ -2176,38 +2091,28 @@ FROM k GROUP BY base ORDER BY base
 # ---------------------------------------------------------------------------
 
 def _idn_label_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.urls import punycode_decode, punycode_encode
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                label = ("h" + str(did % 10)
-                         + chr(1040 + did % 32)
-                         + chr(19968 + did % 100))
-                wire = "xn--" + punycode_encode(label)
-                back = punycode_decode(wire[4:])
-                rows.append({
-                    "doc_id": did,
-                    "is_idn": wire.startswith("xn--"),
-                    "decoded_len": len(back),
-                    "cp_sum": sum(ord(c) for c in back),
-                    "ascii_prefix": back[:2],
-                    "roundtrip_ok": back == label,
-                    "wire_is_ascii": all(ord(c) < 128 for c in wire)})
-            yield pd.DataFrame(rows)
+    def run(row):
+        did = row["doc_id"]
+        label = ("h" + str(did % 10) + chr(1040 + did % 32)
+                 + chr(19968 + did % 100))
+        wire = "xn--" + punycode_encode(label)
+        back = punycode_decode(wire[4:])
+        return {"doc_id": did, "is_idn": wire.startswith("xn--"),
+                "decoded_len": len(back),
+                "cp_sum": sum(ord(c) for c in back),
+                "ascii_prefix": back[:2], "roundtrip_ok": back == label,
+                "wire_is_ascii": all(ord(c) < 128 for c in wire)}
 
-    return (src.mapInPandas(run, "doc_id long, is_idn boolean,"
-                                 " decoded_len long, cp_sum long,"
-                                 " ascii_prefix string,"
-                                 " roundtrip_ok boolean,"
-                                 " wire_is_ascii boolean")
+    return (map_rows(src, run, "doc_id long, is_idn boolean,"
+                               " decoded_len long, cp_sum long,"
+                               " ascii_prefix string,"
+                               " roundtrip_ok boolean,"
+                               " wire_is_ascii boolean")
                .transform(_sorted1, "doc_id"))
 
 
@@ -3344,8 +3249,6 @@ ORDER BY r.pr
 # ---------------------------------------------------------------------------
 
 def _flac_subframe_decode(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.flaccodec import decode_flac, encode_flac
 
     d = _t(spark, sf, "documents").select("doc_id")
@@ -3364,40 +3267,24 @@ def _flac_subframe_decode(spark: SparkSession, sf: str) -> DataFrame:
         return ([(did * 7 + i * i * i + i * 53) % 3001 - 1500
                  for i in range(64)], "fixed", 4, 12)
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                s, kind, order, rice = signal(int(did))
-                payloads.append(encode_flac(s, kind, order=order,
-                                            rice=rice))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        s, kind, order, rice = signal(row["doc_id"])
+        return {"doc_id": row["doc_id"],
+                "payload": encode_flac(s, kind, order=order, rice=rice)}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = decode_flac(bytes(p))
-                s = r["samples"]
-                rows.append({"doc_id": int(did),
-                             "subframe_type": r["subframe_type"],
-                             "pred_order": r["order"],
-                             "n_samples": r["n_samples"],
-                             "sample_sum": sum(s),
-                             "max_abs": max(abs(v) for v in s),
-                             "last_sample": s[-1],
-                             "crc_ok": r["crc_ok"],
-                             "md5_ok": r["md5_ok"]})
-            yield pd.DataFrame(rows)
+    def dec(row):
+        r = decode_flac(row["payload"])
+        s = r["samples"]
+        return {**r, "doc_id": row["doc_id"], "pred_order": r["order"],
+                "sample_sum": sum(s), "max_abs": max(abs(v) for v in s),
+                "last_sample": s[-1]}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, subframe_type string,"
-                                 " pred_order long, n_samples long,"
-                                 " sample_sum long, max_abs long,"
-                                 " last_sample long, crc_ok boolean,"
-                                 " md5_ok boolean")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, subframe_type string,"
+                                  " pred_order long, n_samples long,"
+                                  " sample_sum long, max_abs long,"
+                                  " last_sample long, crc_ok boolean,"
+                                  " md5_ok boolean")
                .transform(_sorted1, "doc_id"))
 
 
@@ -3455,42 +3342,26 @@ FROM s ORDER BY doc_id
 def _zstd_frame_probe(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
 
-    import pandas as pd
-
     from .operators.zstdframe import decode_zstd_frame, encode_zstd_raw
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            payloads = [encode_zstd_raw(t.encode("utf-8") + b"z" * 128, 64)
-                        for t in pdf["text"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        return {"doc_id": row["doc_id"], "payload": encode_zstd_raw(
+            row["text"].encode("utf-8") + b"z" * 128, 64)}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = decode_zstd_frame(bytes(p))
-                rows.append({
-                    "doc_id": int(did),
-                    "content_len": r["content_len"],
-                    "n_blocks": r["n_blocks"],
-                    "n_raw": r["n_raw"], "n_rle": r["n_rle"],
-                    "frame_bytes": r["frame_bytes"],
-                    "fcs_ok": r["content_len"] == r["fcs"],
-                    "content_md5":
-                        hashlib.md5(r["content"]).hexdigest()})
-            yield pd.DataFrame(rows)
+    def dec(row):
+        r = decode_zstd_frame(row["payload"])
+        return {**r, "doc_id": row["doc_id"],
+                "fcs_ok": r["content_len"] == r["fcs"],
+                "content_md5": hashlib.md5(r["content"]).hexdigest()}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, content_len long,"
-                                 " n_blocks long, n_raw long,"
-                                 " n_rle long, frame_bytes long,"
-                                 " fcs_ok boolean, content_md5 string")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, content_len long,"
+                                  " n_blocks long, n_raw long,"
+                                  " n_rle long, frame_bytes long,"
+                                  " fcs_ok boolean, content_md5 string")
                .transform(_sorted1, "doc_id"))
 
 
@@ -3557,48 +3428,28 @@ GROUP BY b.doc_id ORDER BY b.doc_id
 def _zstd_compressed_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
 
-    import pandas as pd
-
     from .operators.zstdframe import decode_zstd_frame, encode_zstd_compressed
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        for pdf in it:
-            payloads = []
-            for t in pdf["text"]:
-                lits = t.encode("utf-8") + b"z"
-                payloads.append(encode_zstd_compressed(
-                    [(lits, [(len(lits), 1, 199)])]))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    def enc(row):
+        lits = row["text"].encode("utf-8") + b"z"
+        return {"doc_id": row["doc_id"], "payload": encode_zstd_compressed(
+            [(lits, [(len(lits), 1, 199)])])}
 
-    def dec(it):
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                r = decode_zstd_frame(bytes(p))
-                rows.append({
-                    "doc_id": int(did),
-                    "content_len": r["content_len"],
-                    "n_blocks": r["n_blocks"],
-                    "n_compressed": r["n_compressed"],
-                    "n_seq": r["n_seq"],
-                    "lit_len": r["lit_len"],
-                    "match_len": r["match_len"],
-                    "fcs_ok": r["content_len"] == r["fcs"],
-                    "content_md5":
-                        hashlib.md5(r["content"]).hexdigest()})
-            yield pd.DataFrame(rows)
+    def dec(row):
+        r = decode_zstd_frame(row["payload"])
+        return {**r, "doc_id": row["doc_id"],
+                "fcs_ok": r["content_len"] == r["fcs"],
+                "content_md5": hashlib.md5(r["content"]).hexdigest()}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, content_len long,"
-                                 " n_blocks long, n_compressed long,"
-                                 " n_seq long, lit_len long,"
-                                 " match_len long, fcs_ok boolean,"
-                                 " content_md5 string")
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, content_len long,"
+                                  " n_blocks long, n_compressed long,"
+                                  " n_seq long, lit_len long,"
+                                  " match_len long, fcs_ok boolean,"
+                                  " content_md5 string")
                .transform(_sorted1, "doc_id"))
 
 
@@ -3648,10 +3499,10 @@ def _winnowing_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
 
     from .operators.text import md5_hash
 
-    d = _fanout(_t(spark, sf, "documents")
-                .select("doc_id", F.trim("text").alias("t"))
-                .where(F.length("t") >= _WIN_K + _WIN_W - 1), spark)
-    # _fanout: the k-gram explode + 1.4M md5()s otherwise run in the
+    d = fanout(_t(spark, sf, "documents")
+               .select("doc_id", F.trim("text").alias("t"))
+               .where(F.length("t") >= _WIN_K + _WIN_W - 1))
+    # fanout: the k-gram explode + 1.4M md5()s otherwise run in the
     # single-task local scan stage before the window exchange
     grams = (d.select(
         "doc_id", F.length("t").alias("n"),
@@ -3749,8 +3600,6 @@ FROM fp GROUP BY doc_id ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _h264_slice_header_walk(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.multimodal import (encode_h264_annexb,
                                        parse_h264_slice_headers)
 
@@ -3759,36 +3608,30 @@ def _h264_slice_header_walk(spark: SparkSession, sf: str) -> DataFrame:
     dims = [(1920, 1080), (1280, 720), (640, 360), (354, 288),
             (1918, 1078)]
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                w, h = dims[did % 5]
-                s = encode_h264_annexb(w, h, n_idr=1 + did % 3,
-                                       n_nonidr=2 + did % 4,
-                                       profile=66 + (did % 2) * 11,
-                                       level=30 + (did % 3) * 10)
-                hs = parse_h264_slice_headers(s)
-                rows.append({
-                    "doc_id": did,
-                    "n_slices": len(hs),
-                    "i_slices": sum(1 for r in hs if r["nal_type"] == 5),
-                    "p_slices": sum(1 for r in hs if r["nal_type"] == 1),
-                    "frame_num_sum": sum(r["frame_num"] for r in hs),
-                    "idr_id_sum": sum(r["idr_pic_id"] or 0 for r in hs),
-                    "qp_sum": sum(r["slice_qp"] for r in hs),
-                    "deblock_off_slices":
-                        sum(1 for r in hs if r["deblock_idc"] == 1),
-                    "alpha_sum": sum(r["alpha_offset"] for r in hs),
-                    "beta_sum": sum(r["beta_offset"] for r in hs)})
-            yield pd.DataFrame(rows)
+    def run(row):
+        did = row["doc_id"]
+        w, h = dims[did % 5]
+        s = encode_h264_annexb(w, h, n_idr=1 + did % 3,
+                               n_nonidr=2 + did % 4,
+                               profile=66 + (did % 2) * 11,
+                               level=30 + (did % 3) * 10)
+        hs = parse_h264_slice_headers(s)
+        return {"doc_id": did, "n_slices": len(hs),
+                "i_slices": sum(1 for r in hs if r["nal_type"] == 5),
+                "p_slices": sum(1 for r in hs if r["nal_type"] == 1),
+                "frame_num_sum": sum(r["frame_num"] for r in hs),
+                "idr_id_sum": sum(r["idr_pic_id"] or 0 for r in hs),
+                "qp_sum": sum(r["slice_qp"] for r in hs),
+                "deblock_off_slices":
+                    sum(1 for r in hs if r["deblock_idc"] == 1),
+                "alpha_sum": sum(r["alpha_offset"] for r in hs),
+                "beta_sum": sum(r["beta_offset"] for r in hs)}
 
-    return (src.mapInPandas(run, "doc_id long, n_slices long,"
-                                 " i_slices long, p_slices long,"
-                                 " frame_num_sum long, idr_id_sum long,"
-                                 " qp_sum long, deblock_off_slices long,"
-                                 " alpha_sum long, beta_sum long")
+    return (map_rows(src, run, "doc_id long, n_slices long,"
+                               " i_slices long, p_slices long,"
+                               " frame_num_sum long, idr_id_sum long,"
+                               " qp_sum long, deblock_off_slices long,"
+                               " alpha_sum long, beta_sum long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -3847,8 +3690,6 @@ FROM s GROUP BY doc_id ORDER BY doc_id
 def _warc_zst_extract(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
 
-    import pandas as pd
-
     from .operators.webdataset import build_warc, parse_warc_records
     from .operators.zstdframe import (decode_zstd_frame,
                                       encode_zstd_compressed)
@@ -3856,39 +3697,30 @@ def _warc_zst_extract(spark: SparkSession, sf: str) -> DataFrame:
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def roundtrip(it):
-        for pdf in it:
-            rows = []
-            for did, text in zip(pdf["doc_id"].astype("int64"),
-                                 pdf["text"]):
-                did = int(did)
-                body = str(text).encode("utf-8")
-                w = build_warc([
-                    ("warcinfo", f"<urn:uuid:{did}-info>",
-                     b"software: engine-test"),
-                    ("response", f"<urn:uuid:{did}-resp>", body)])
-                half = len(w) // 2
-                frame = encode_zstd_compressed(
-                    [(w[:half], []), (w[half:], [])],
-                    checksum=True, lit_mode="treeless")
-                z = decode_zstd_frame(frame)
-                recs = parse_warc_records(z["content"])
-                resp = [r for r in recs if r["type"] == "response"][0]
-                rows.append({
-                    "doc_id": did,
-                    "n_records": len(recs),
-                    "n_zstd_blocks": z["n_blocks"],
-                    "fcs_ok": z["content_len"] == z["fcs"],
-                    "response_len": resp["content_length"],
-                    "response_md5": hashlib.md5(
-                        resp["payload"]).hexdigest(),
-                })
-            yield pd.DataFrame(rows)
+    def roundtrip(row):
+        did = row["doc_id"]
+        body = str(row["text"]).encode("utf-8")
+        w = build_warc([
+            ("warcinfo", f"<urn:uuid:{did}-info>",
+             b"software: engine-test"),
+            ("response", f"<urn:uuid:{did}-resp>", body)])
+        half = len(w) // 2
+        frame = encode_zstd_compressed(
+            [(w[:half], []), (w[half:], [])],
+            checksum=True, lit_mode="treeless")
+        z = decode_zstd_frame(frame)
+        recs = parse_warc_records(z["content"])
+        resp = [r for r in recs if r["type"] == "response"][0]
+        return {"doc_id": did, "n_records": len(recs),
+                "n_zstd_blocks": z["n_blocks"],
+                "fcs_ok": z["content_len"] == z["fcs"],
+                "response_len": resp["content_length"],
+                "response_md5": hashlib.md5(resp["payload"]).hexdigest()}
 
-    return (src.mapInPandas(roundtrip,
-                            "doc_id long, n_records long,"
-                            " n_zstd_blocks long, fcs_ok boolean,"
-                            " response_len long, response_md5 string")
+    return (map_rows(src, roundtrip,
+                     "doc_id long, n_records long,"
+                     " n_zstd_blocks long, fcs_ok boolean,"
+                     " response_len long, response_md5 string")
                .transform(_sorted1, "doc_id"))
 
 
@@ -3927,8 +3759,6 @@ FROM documents ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _av1_obu_probe(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.multimodal import (encode_av1_obu_stream,
                                        parse_av1_obu_stream)
 
@@ -3937,34 +3767,20 @@ def _av1_obu_probe(spark: SparkSession, sf: str) -> DataFrame:
     dims = [(1920, 1080), (1280, 720), (640, 360), (354, 288),
             (1918, 1078)]
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                w, h = dims[did % 5]
-                sizes = [20 + ((did + 11 * i) % 50)
-                         for i in range(1 + did % 4)]
-                s = encode_av1_obu_stream(did % 3, 8 + did % 5, w, h,
-                                          sizes)
-                r = parse_av1_obu_stream(s)
-                rows.append({
-                    "doc_id": did,
-                    "profile": r["profile"],
-                    "level": r["level"],
-                    "max_width": r["max_width"],
-                    "max_height": r["max_height"],
-                    "sub_x": r["subsampling_x"],
-                    "sub_y": r["subsampling_y"],
-                    "n_obus": r["n_obus"],
-                    "n_frames": r["obu_census"].get(6, 0),
-                    "frame_bytes": r["frame_bytes"]})
-            yield pd.DataFrame(rows)
+    def run(row):
+        did = row["doc_id"]
+        w, h = dims[did % 5]
+        sizes = [20 + ((did + 11 * i) % 50) for i in range(1 + did % 4)]
+        r = parse_av1_obu_stream(
+            encode_av1_obu_stream(did % 3, 8 + did % 5, w, h, sizes))
+        return {**r, "doc_id": did, "sub_x": r["subsampling_x"],
+                "sub_y": r["subsampling_y"],
+                "n_frames": r["obu_census"].get(6, 0)}
 
-    return (src.mapInPandas(run, "doc_id long, profile long, level long,"
-                                 " max_width long, max_height long,"
-                                 " sub_x long, sub_y long, n_obus long,"
-                                 " n_frames long, frame_bytes long")
+    return (map_rows(src, run, "doc_id long, profile long, level long,"
+                               " max_width long, max_height long,"
+                               " sub_x long, sub_y long, n_obus long,"
+                               " n_frames long, frame_bytes long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -4016,9 +3832,10 @@ FROM d ORDER BY d.doc_id
 # bytes (offset = lit_len + 64 reaches past the frame into the dict).
 # The oracle pins every content-derived field incl. the md5, and the
 # dict_gated column pins the refusal path (decode WITHOUT the
-# dictionary must raise, never misdecode). Scale: the dictionary blob
-# is built per Arrow batch from constants (no broadcast needed);
-# frames decode independently; one sort.
+# dictionary must raise, never misdecode). Scale: the dictionary is
+# parsed once at query construction and travels with the row functions
+# (~6 kB pickled, no broadcast needed); frames decode independently;
+# one sort.
 # Registered BEHIND the driver's 50-slot window (r10 queue discipline:
 # new queries never displace committed stamp slots).
 # ---------------------------------------------------------------------------
@@ -4030,8 +3847,6 @@ _ZDICT_TAIL = 64
 def _zstd_dict_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
 
-    import pandas as pd
-
     from .operators.zstdframe import (UnsupportedZstd, decode_zstd_frame,
                                       encode_zstd_compressed,
                                       encode_zstd_dictionary,
@@ -4040,54 +3855,34 @@ def _zstd_dict_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def enc(it):
-        blob = encode_zstd_dictionary(_ZDICT_MARK + b"q" * _ZDICT_TAIL,
-                                      dict_id=101)
-        parsed = parse_zstd_dictionary(blob)
-        for pdf in it:
-            payloads = []
-            for t in pdf["text"]:
-                lits = t.encode("utf-8")
-                seqs = [(len(lits), len(lits) + _ZDICT_TAIL, _ZDICT_TAIL)]
-                payloads.append(encode_zstd_compressed(
-                    [(lits, seqs)], seq_mode="repeat",
-                    lit_mode="treeless", dictionary=parsed,
-                    checksum=True))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
-                                "payload": payloads})
+    parsed = parse_zstd_dictionary(encode_zstd_dictionary(
+        _ZDICT_MARK + b"q" * _ZDICT_TAIL, dict_id=101))
 
-    def dec(it):
-        blob = encode_zstd_dictionary(_ZDICT_MARK + b"q" * _ZDICT_TAIL,
-                                      dict_id=101)
-        parsed = parse_zstd_dictionary(blob)
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"].astype("int64"),
-                              pdf["payload"]):
-                p = bytes(p)
-                try:
-                    decode_zstd_frame(p)
-                    gated = False              # must never happen
-                except UnsupportedZstd:
-                    gated = True
-                r = decode_zstd_frame(p, dictionary=parsed)
-                rows.append({
-                    "doc_id": int(did),
-                    "content_len": r["content_len"],
-                    "n_seq": r["n_seq"],
-                    "lit_len": r["lit_len"],
-                    "match_len": r["match_len"],
-                    "fcs_ok": r["content_len"] == r["fcs"],
-                    "dict_gated": gated,
-                    "content_md5":
-                        hashlib.md5(r["content"]).hexdigest()})
-            yield pd.DataFrame(rows)
+    def enc(row):
+        lits = row["text"].encode("utf-8")
+        seqs = [(len(lits), len(lits) + _ZDICT_TAIL, _ZDICT_TAIL)]
+        return {"doc_id": row["doc_id"], "payload": encode_zstd_compressed(
+            [(lits, seqs)], seq_mode="repeat", lit_mode="treeless",
+            dictionary=parsed, checksum=True)}
 
-    return (src.mapInPandas(enc, "doc_id long, payload binary")
-               .mapInPandas(dec, "doc_id long, content_len long,"
-                                 " n_seq long, lit_len long,"
-                                 " match_len long, fcs_ok boolean,"
-                                 " dict_gated boolean, content_md5 string")
+    def dec(row):
+        p = row["payload"]
+        try:
+            decode_zstd_frame(p)
+            gated = False              # must never happen
+        except UnsupportedZstd:
+            gated = True
+        r = decode_zstd_frame(p, dictionary=parsed)
+        return {**r, "doc_id": row["doc_id"],
+                "fcs_ok": r["content_len"] == r["fcs"],
+                "dict_gated": gated,
+                "content_md5": hashlib.md5(r["content"]).hexdigest()}
+
+    enc_df = map_rows(src, enc, "doc_id long, payload binary")
+    return (map_rows(enc_df, dec, "doc_id long, content_len long,"
+                                  " n_seq long, lit_len long,"
+                                  " match_len long, fcs_ok boolean,"
+                                  " dict_gated boolean, content_md5 string")
                .transform(_sorted1, "doc_id"))
 
 
@@ -4133,42 +3928,34 @@ FROM documents ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _h264_ipcm_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from .operators.multimodal import decode_h264_ipcm, encode_h264_ipcm
 
     d = _t(spark, sf, "documents").select("doc_id")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def work(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"].astype("int64"):
-                did = int(did)
-                w = 16 * (1 + did % 4)
-                h = 16 * (1 + did % 3)
-                luma = bytes((3 * x + 5 * y + did) % 256
-                             for y in range(h) for x in range(w))
-                cb = bytes((7 * x + 11 * y + 2 * did) % 256
-                           for y in range(h // 2) for x in range(w // 2))
-                cr = bytes((13 * x + 17 * y + 3 * did) % 256
-                           for y in range(h // 2) for x in range(w // 2))
-                dec = decode_h264_ipcm(encode_h264_ipcm(luma, cb, cr, w, h))
-                rows.append({
-                    "doc_id": did,
-                    "width": dec["width"], "height": dec["height"],
-                    "n_mbs": dec["n_macroblocks"],
-                    "lossless": (dec["luma"], dec["cb"], dec["cr"])
-                                == (luma, cb, cr),
-                    "luma_sum": sum(dec["luma"]),
-                    "cb_sum": sum(dec["cb"]),
-                    "cr_sum": sum(dec["cr"])})
-            yield pd.DataFrame(rows)
+    def work(row):
+        did = row["doc_id"]
+        w = 16 * (1 + did % 4)
+        h = 16 * (1 + did % 3)
+        luma = bytes((3 * x + 5 * y + did) % 256
+                     for y in range(h) for x in range(w))
+        cb = bytes((7 * x + 11 * y + 2 * did) % 256
+                   for y in range(h // 2) for x in range(w // 2))
+        cr = bytes((13 * x + 17 * y + 3 * did) % 256
+                   for y in range(h // 2) for x in range(w // 2))
+        dec = decode_h264_ipcm(encode_h264_ipcm(luma, cb, cr, w, h))
+        return {"doc_id": did,
+                "width": dec["width"], "height": dec["height"],
+                "n_mbs": dec["n_macroblocks"],
+                "lossless": (dec["luma"], dec["cb"], dec["cr"])
+                            == (luma, cb, cr),
+                "luma_sum": sum(dec["luma"]),
+                "cb_sum": sum(dec["cb"]), "cr_sum": sum(dec["cr"])}
 
-    return (src.mapInPandas(work, "doc_id long, width long, height long,"
-                                  " n_mbs long, lossless boolean,"
-                                  " luma_sum long, cb_sum long,"
-                                  " cr_sum long")
+    return (map_rows(src, work, "doc_id long, width long, height long,"
+                                " n_mbs long, lossless boolean,"
+                                " luma_sum long, cb_sum long,"
+                                " cr_sum long")
                .transform(_sorted1, "doc_id"))
 
 
@@ -4313,7 +4100,7 @@ def _bz2_multistream_extract(spark: SparkSession, sf: str) -> DataFrame:
             "content_md5": hashlib.md5(r["content"]).hexdigest(),
         }])
 
-    return (_spread(d, "gid", 16).groupBy("gid")
+    return (group_spread(d, "gid", 16).groupBy("gid")
              .applyInPandas(per_group,
                             "gid long, n_streams long, n_blocks long,"
                             " content_len long, content_md5 string")
@@ -4358,37 +4145,25 @@ def _xz_dump_extract(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
     import lzma
 
-    import pandas as pd
-
     from .operators.xzlzma import decode_xz
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
     checks = [lzma.CHECK_CRC32, lzma.CHECK_CRC64, lzma.CHECK_SHA256]
 
-    def roundtrip(it):
-        for pdf in it:
-            rows = []
-            for did, t in zip(pdf["doc_id"].astype("int64"), pdf["text"]):
-                raw = t.encode("utf-8")
-                blob = lzma.compress(raw, format=lzma.FORMAT_XZ,
-                                     check=checks[int(did) % 3])
-                r = decode_xz(blob)
-                rows.append({
-                    "doc_id": int(did),
-                    "check_name": r["checks"][0],
-                    "n_blocks": r["n_blocks"],
-                    "content_len": len(r["content"]),
-                    "content_md5":
-                        hashlib.md5(r["content"]).hexdigest(),
-                })
-            yield pd.DataFrame(rows)
+    def roundtrip(row):
+        blob = lzma.compress(row["text"].encode("utf-8"),
+                             format=lzma.FORMAT_XZ,
+                             check=checks[row["doc_id"] % 3])
+        r = decode_xz(blob)
+        return {"doc_id": row["doc_id"], "check_name": r["checks"][0],
+                "n_blocks": r["n_blocks"], "content_len": len(r["content"]),
+                "content_md5": hashlib.md5(r["content"]).hexdigest()}
 
     return _sorted1(
-        src.mapInPandas(
-            roundtrip, "doc_id long, check_name string,"
-                       " n_blocks long, content_len long,"
-                       " content_md5 string"),
+        map_rows(src, roundtrip, "doc_id long, check_name string,"
+                                 " n_blocks long, content_len long,"
+                                 " content_md5 string"),
         "doc_id")
 
 
@@ -4453,7 +4228,7 @@ def _wikipedia_dump_pipeline(spark: SparkSession, sf: str) -> DataFrame:
         return pd.DataFrame([{"gid": int(pdf["gid"].iloc[0]),
                               "xml": "<mediawiki>" + xml + "</mediawiki>"}])
 
-    shards = _spread(d, "gid", 32).groupBy("gid") \
+    shards = group_spread(d, "gid", 32).groupBy("gid") \
         .applyInPandas(per_group, "gid long, xml string")
     pages = shards.select(
         F.explode(F.expr(
@@ -4511,33 +4286,24 @@ def _deflate_dynamic_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import gzip as _gz
     import hashlib
 
-    import pandas as pd
-
     from .operators.deflatecodec import gzip_compress, gzip_decompress
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def roundtrip(it):
-        for pdf in it:
-            rows = []
-            for did, t in zip(pdf["doc_id"].astype("int64"), pdf["text"]):
-                raw = t.encode("utf-8")
-                blob = gzip_compress(raw)
-                back = gzip_decompress(blob)
-                rows.append({
-                    "doc_id": int(did),
-                    "content_len": len(back),
-                    "content_md5": hashlib.md5(back).hexdigest(),
-                    "stdlib_agrees": _gz.decompress(blob) == raw,
-                    "self_ok": back == raw,
-                })
-            yield pd.DataFrame(rows)
+    def roundtrip(row):
+        raw = row["text"].encode("utf-8")
+        blob = gzip_compress(raw)
+        back = gzip_decompress(blob)
+        return {"doc_id": row["doc_id"], "content_len": len(back),
+                "content_md5": hashlib.md5(back).hexdigest(),
+                "stdlib_agrees": _gz.decompress(blob) == raw,
+                "self_ok": back == raw}
 
-    return (src.mapInPandas(
-                roundtrip, "doc_id long, content_len long,"
-                           " content_md5 string, stdlib_agrees boolean,"
-                           " self_ok boolean")
+    return (map_rows(src, roundtrip,
+                     "doc_id long, content_len long,"
+                     " content_md5 string, stdlib_agrees boolean,"
+                     " self_ok boolean")
                .transform(_sorted1, "doc_id"))
 
 
@@ -4703,34 +4469,25 @@ FROM s ORDER BY user_id
 def _lz4_frame_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
 
-    import pandas as pd
-
     from .operators.lz4codec import (lz4_frame_compress,
                                      lz4_frame_decompress)
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
-    def roundtrip(it):
-        for pdf in it:
-            rows = []
-            for did, t in zip(pdf["doc_id"].astype("int64"), pdf["text"]):
-                raw = t.encode("utf-8")
-                blob = lz4_frame_compress(raw, block_checksum=True)
-                back = lz4_frame_decompress(blob)
-                rows.append({
-                    "doc_id": int(did),
-                    "content_len": len(back),
-                    "content_md5": hashlib.md5(back).hexdigest(),
-                    "n_blocks": max(1, -(-len(raw) // 65536)),
-                    "self_ok": back == raw,
-                })
-            yield pd.DataFrame(rows)
+    def roundtrip(row):
+        raw = row["text"].encode("utf-8")
+        back = lz4_frame_decompress(
+            lz4_frame_compress(raw, block_checksum=True))
+        return {"doc_id": row["doc_id"], "content_len": len(back),
+                "content_md5": hashlib.md5(back).hexdigest(),
+                "n_blocks": max(1, -(-len(raw) // 65536)),
+                "self_ok": back == raw}
 
-    return (src.mapInPandas(
-                roundtrip, "doc_id long, content_len long,"
-                           " content_md5 string, n_blocks int,"
-                           " self_ok boolean")
+    return (map_rows(src, roundtrip,
+                     "doc_id long, content_len long,"
+                     " content_md5 string, n_blocks int,"
+                     " self_ok boolean")
                .transform(_sorted1, "doc_id"))
 
 
@@ -4805,7 +4562,7 @@ def _zip_archive_extract(spark: SparkSession, sf: str) -> DataFrame:
             })
         return pd.DataFrame(rows)
 
-    return (_spread(d, "bucket", 32).groupBy("bucket")
+    return (group_spread(d, "bucket", 32).groupBy("bucket")
              .applyInPandas(per_bucket,
                             "doc_id long, content_len long,"
                             " content_md5 string, crc_ok boolean,"
@@ -5079,7 +4836,7 @@ def _sqlite_table_scan(spark: SparkSession, sf: str) -> DataFrame:
             })
         return pd.DataFrame(rows)
 
-    return (_spread(d, "bucket", 32).groupBy("bucket")
+    return (group_spread(d, "bucket", 32).groupBy("bucket")
              .applyInPandas(per_bucket,
                             "doc_id long, n_chars_db long, lang string,"
                             " text_md5 string, row_ok boolean")
@@ -5221,37 +4978,31 @@ _GEO_CITIES: list[tuple[str, float, float]] = [
 def _geo_nearest_city(spark: SparkSession, sf: str) -> DataFrame:
     import math
 
-    import pandas as pd
-
     c = _t(spark, sf, "customer").select(F.col("c_custkey").alias("k"))
 
-    def enrich(it):
-        r2 = 2.0 * 6371008.8
-        for pdf in it:
-            rows = []
-            for k in pdf["k"].astype("int64"):
-                k = int(k)
-                lat = (k * 37 % 1800) / 10.0 - 90.0
-                lon = (k * 73 % 3600) / 10.0 - 180.0
-                best = None
-                n_bbox = 0
-                for name, clat, clon in _GEO_CITIES:
-                    if abs(clat - lat) <= 20.0 and abs(clon - lon) <= 20.0:
-                        n_bbox += 1
-                    h = (math.sin(math.radians(clat - lat) / 2) ** 2
-                         + math.cos(math.radians(lat))
-                         * math.cos(math.radians(clat))
-                         * math.sin(math.radians(clon - lon) / 2) ** 2)
-                    d = r2 * math.asin(math.sqrt(h))
-                    if best is None or (d, name) < best:
-                        best = (d, name)
-                rows.append({"c_custkey": k, "nearest_city": best[1],
-                             "dist_m": round(best[0]),
-                             "n_bbox": n_bbox})
-            yield pd.DataFrame(rows)
+    r2 = 2.0 * 6371008.8
 
-    return (c.mapInPandas(enrich, "c_custkey long, nearest_city string,"
-                                  " dist_m long, n_bbox int")
+    def enrich(row):
+        k = row["k"]
+        lat = (k * 37 % 1800) / 10.0 - 90.0
+        lon = (k * 73 % 3600) / 10.0 - 180.0
+        best = None
+        n_bbox = 0
+        for name, clat, clon in _GEO_CITIES:
+            if abs(clat - lat) <= 20.0 and abs(clon - lon) <= 20.0:
+                n_bbox += 1
+            h = (math.sin(math.radians(clat - lat) / 2) ** 2
+                 + math.cos(math.radians(lat))
+                 * math.cos(math.radians(clat))
+                 * math.sin(math.radians(clon - lon) / 2) ** 2)
+            d = r2 * math.asin(math.sqrt(h))
+            if best is None or (d, name) < best:
+                best = (d, name)
+        return {"c_custkey": k, "nearest_city": best[1],
+                "dist_m": round(best[0]), "n_bbox": n_bbox}
+
+    return (map_rows(c, enrich, "c_custkey long, nearest_city string,"
+                                " dist_m long, n_bbox int")
              .transform(_sorted1, "c_custkey"))
 
 
@@ -5700,7 +5451,7 @@ def _git_packfile_scan(spark: SparkSession, sf: str) -> DataFrame:
     # wall) — 32 concurrent repositories quadruple-fork git per bucket
     # and the subprocess storm beats the extra parallelism; the decode
     # side is already batched (sha1 lanes + table-driven inflate).
-    return (_spread(d, "bucket", 16).groupBy("bucket")
+    return (group_spread(d, "bucket", 16).groupBy("bucket")
              .applyInPandas(per_bucket,
                             "doc_id long, content_len long,"
                             " content_md5 string, sha_ok boolean")
@@ -6198,7 +5949,7 @@ FROM sdx GROUP BY sdx ORDER BY sdx
 # on the driver-checked path). Complements arrow_ipc_roundtrip
 # (pyarrow→pyarrow through our Arrow seam) by replacing the READ side
 # with the from-scratch decoder. Oracle recomputes all published
-# values from the parquet originals. Scale: _spread-partitioned
+# values from the parquet originals. Scale: group_spread-partitioned
 # applyInPandas shards, decode partition-local.
 # Registered BEHIND the r11 window (registration-pause discipline).
 # ---------------------------------------------------------------------------
@@ -6245,7 +5996,7 @@ def _arrow_ipc_scratch_read(spark: SparkSession, sf: str) -> DataFrame:
             })
         return pd.DataFrame(rows).astype({"n_chars_or_null": "object"})
 
-    return (_spread(d, "shard", 16).groupBy("shard")
+    return (group_spread(d, "shard", 16).groupBy("shard")
             .applyInPandas(build_and_read,
                            "doc_id long, text_md5 string,"
                            " n_chars_or_null long, lang string")

@@ -197,8 +197,11 @@ def _load_all() -> None:
     # No try/except: a broken import here must fail loudly — swallowing it
     # would silently shrink queries()/oracle_sql() and the driver's
     # correctness gate would pass without checking the lost queries.
+    # queries_scale (the ordered loader of its four part files) comes
+    # before queries_retrieval: that is the registration order the
+    # golden-order test pins.
     from . import (queries_agg, queries_audit, queries_core,  # noqa: F401
-                   queries_joins, queries_ml, queries_retrieval,
-                   queries_scalar, queries_scale, queries_sketches,
+                   queries_joins, queries_ml, queries_scale,
+                   queries_retrieval, queries_scalar, queries_sketches,
                    queries_streaming)
     _LOADED = True

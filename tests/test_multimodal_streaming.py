@@ -741,6 +741,14 @@ def test_gif_lzw_roundtrip_and_corruption():
         d = decode_gif(encode_gif(idx, pal, interlace=inter))
         assert np.array_equal(d["rgb"], pal[idx])
         assert d["interlaced"] == inter
+    # odd-sized 16-colour image once reported as "truncated" on decode
+    ix = (np.random.RandomState(6).randint(0, 256, (14, 23)) % 16
+          ).astype(np.uint8)
+    for n_col in (16, 32, 256):
+        pal16 = rng.randint(0, 256, size=(n_col, 3), dtype=np.uint8)
+        for inter in (False, True):
+            d = decode_gif(encode_gif(ix, pal16, interlace=inter))
+            assert np.array_equal(d["rgb"], pal16[ix])
     # corruption taxonomy: truncated sub-blocks, bad index, non-GIF
     j = encode_gif(idx, pal)
     with pytest.raises(ValueError):

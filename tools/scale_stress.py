@@ -17,7 +17,7 @@ pairs out, and wall for the two headline paths:
 - ``minhash_dedup_pairs_prod`` shape (128 perms × 16 bands), and
 - the full ``prep_pipeline`` composition (exact dedup → MinHash →
   connected components → gates → split → pack), re-composed here from
-  the same public operators ``queries_scale._prep_pipeline`` uses.
+  the same public operators ``queries_scale_part1._prep_pipeline`` uses.
 
 Usage: python tools/scale_stress.py [sf_dir] [k ...]   (default 1 3 10)
 """
@@ -87,7 +87,7 @@ def run_minhash(docs: DataFrame) -> tuple[float, int]:
 
 
 def run_prep(spark, docs: DataFrame) -> tuple[float, int]:
-    """The prep_pipeline composition (queries_scale._prep_pipeline) on an
+    """The prep_pipeline composition (queries_scale_part1._prep_pipeline) on an
     arbitrary documents frame."""
     from precios_nexo_sperant_etl_spark.operators.dedup_fuzzy import (
         exact_dedup_survivors, minhash_dedup_pairs)
